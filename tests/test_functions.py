@@ -205,25 +205,12 @@ def test_ivf_probe_subset_of_bruteforce(spark):
 
 # ---------------------------------------------------------------- multimodal
 def test_multimodal_feature_extract_deterministic(spark):
-    df = multimodal.synthetic_media(spark, n=12)
+    df = multimodal.synthetic_media_oracle(spark, n=12)
     out1 = multimodal.extract_features(df).orderBy("media_id").collect()
     out2 = multimodal.extract_features(df).orderBy("media_id").collect()
     assert [r.features for r in out1] == [r.features for r in out2]
     assert all(len(r.features) == multimodal.FEATURE_DIM for r in out1)
     assert all(abs(sum(r.features) - 1.0) < 1e-5 for r in out1)  # histogram sums to 1
-
-
-def test_multimodal_real_backend_is_stubbed(spark):
-    df = multimodal.synthetic_media(spark, n=3)
-    with pytest.raises(Exception):  # NotImplementedError inside the task
-        multimodal.extract_features(df, decode_backend="real").collect()
-
-
-def test_frame_sample_stub(spark):
-    df = multimodal.synthetic_media(spark, n=9)
-    frames = multimodal.frame_sample_stub(df, every_ms=1000)
-    got = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] >= 1 for r in got)
 
 
 def test_multimodal_feature_golden_values(spark):

@@ -4,6 +4,7 @@ epoch fencing, schema evolution through merge, lineage records."""
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -150,6 +151,61 @@ def test_empty_batch_records_epoch(spark, tmpdir_path):
     m = merge_into(t, empty, batch_id=5)
     assert m["rows_in"] == 0
     assert 5 in t.committed_batch_ids()
+
+
+def test_empty_batch_commits_same_schema_in_both_modes(spark, tmpdir_path):
+    """The fence-only commit of an empty batch records the evolved schema
+    pinned at planning time, whichever path runs it: an empty
+    CDC_SCHEMA_V2 batch on a V1 table adds source_version under sparse
+    CoW, dense CoW and MoR alike (and MoR, whose empty plan adaptive
+    execution prunes together with the observation, still commits)."""
+    schemas = []
+    for mode, dense in (("cow", None), ("cow", True), ("mor", None)):
+        t = LakeTable.create_if_not_exists(
+            spark, os.path.join(tmpdir_path, f"{mode}-{dense}"), TARGET_SCHEMA, num_buckets=4
+        )
+        merge_into(t, spark.createDataFrame([_ev("I", "a", 1, tokens=[1])], CDC_SCHEMA), batch_id=0)
+        empty = spark.createDataFrame([], CDC_SCHEMA_V2)
+        m = merge_into(t, empty, batch_id=1, mode=mode, dense=dense)
+        assert m["rows_in"] == 0 and 1 in t.committed_batch_ids()
+        assert _state(t) == {"a": [1]}
+        schemas.append(t.stored_schema())
+    assert schemas[0] == schemas[1] == schemas[2]
+    assert "source_version" in schemas[0].fieldNames()
+
+
+_COW_KEYS = {
+    "batch_id", "rows_in", "timings_sec", "op_counts", "affected_buckets",
+    "rows_before", "rows_after", "files_removed", "files_added",
+}
+_MOR_KEYS = {
+    "batch_id", "mode", "rows_in", "timings_sec", "op_counts", "affected_buckets",
+    "files_removed", "files_added", "rows_written",
+}
+
+
+@pytest.mark.parametrize(
+    "mode,dense,keys",
+    [("cow", False, _COW_KEYS), ("cow", True, _COW_KEYS), ("mor", None, _MOR_KEYS)],
+    ids=["sparse_cow", "dense_cow", "mor"],
+)
+def test_manifest_contract(spark, tmpdir_path, mode, dense, keys):
+    """Every merge path commits the same manifest keys that
+    cdc_lineage_metrics and the benchmark's layer report read, and its
+    "stats" phase is 0.0 unless the sparse stats job actually ran."""
+    t = _table(spark, tmpdir_path)
+    rows = [_ev("I", f"d{i}", i + 1, tokens=[i]) for i in range(8)]
+    merge_into(t, spark.createDataFrame(rows, CDC_SCHEMA), batch_id=0)
+    batch = [_ev("U", "d0", 20, tokens=[9]), _ev("D", "d1", 21), _ev("I", "n", 22, tokens=[1])]
+    m = merge_into(t, spark.createDataFrame(batch, CDC_SCHEMA), batch_id=1, mode=mode, dense=dense)
+    assert set(m) == keys | {"version", "skipped"}
+    assert set(t.log.read_entry(m["version"]).manifest) == keys
+    assert set(m["timings_sec"]) == {"stats", "plan", "write"}
+    assert m["rows_in"] == 3 and m["op_counts"] == {"I": 1, "U": 1, "D": 1}
+    if mode == "cow" and not dense:
+        assert m["timings_sec"]["stats"] > 0.0
+    else:
+        assert m["timings_sec"]["stats"] == 0.0
 
 
 def test_merge_schema_widening_int_to_long(spark, tmpdir_path):
@@ -318,7 +374,7 @@ def test_dense_merge_matches_sparse_merge(spark, tmpdir_path):
     assert _state(t_sparse) == _state(t_dense)
 
 
-def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path):
+def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path, monkeypatch):
     """Round-4 regression: the dense path's Observation must complete
     inside foreachBatch (the batch df lives in a CLONED session; the
     merge's union must keep the batch side on the left so the write
@@ -334,21 +390,17 @@ def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path):
     rows = [_ev("I", f"d{i % 10}", i + 1, tokens=[i]) for i in range(20)]
     write_feed(spark.createDataFrame(rows, CDC_SCHEMA), feed, fmt="parquet")
 
-    orig = M._merge_once
-
-    def force_dense(table, changes, batch_id, salt, extra, mode, dense=None, *a, **kw):
-        return orig(table, changes, batch_id, salt, extra, mode, True, *a, **kw)
-
-    M._merge_once = force_dense
-    try:
-        pipe = CdcPipeline(
-            spark, feed, _os.path.join(tmpdir_path, "t"),
-            _os.path.join(tmpdir_path, "c"), num_buckets=4,
-        )
-        lineage = pipe.run_available_now()
-    finally:
-        M._merge_once = orig
+    # any estimated batch counts as dense, so the pipeline's own
+    # merge_into call takes the Observation path
+    monkeypatch.setattr(M, "_DENSE_MIN_EST_ROWS", 0)
+    monkeypatch.setattr(M, "_DENSE_BATCH_ROWS_PER_BUCKET", 0)
+    pipe = CdcPipeline(
+        spark, feed, _os.path.join(tmpdir_path, "t"),
+        _os.path.join(tmpdir_path, "c"), num_buckets=4,
+    )
+    lineage = pipe.run_available_now()
     assert [m.get("rows_in") for m in lineage] == [20]
+    assert lineage[0]["timings_sec"]["stats"] == 0.0  # no stats job: dense ran
     assert {r.doc_id for r in pipe.table.read().collect()} == {f"d{i}" for i in range(10)}
 
 

@@ -15,37 +15,39 @@ copy-on-write MERGE with these semantics:
 * key absent in target      -> insert (op='D' inserts a tombstone so a
   later-arriving stale update still loses — replay equality demands it)
 
-Physical plan (scale-first, ONE or two jobs per batch):
-1. affected-bucket discovery — for a SPARSE batch, one small stats
+Physical plan (scale-first, ONE or two jobs per batch), one code path
+for every mode:
+1. op counts — for a SPARSE copy-on-write batch, one small stats
    aggregation ((op x bucket) counts: rows_in, per-op counts and the
-   affected-bucket list in a single pass); for a DENSE batch (Catalyst
-   row estimate says every bucket is touched) the scan is skipped
-   entirely and the counts ride the write as an Observation;
-2. one fused LWW aggregation: pruned-target rows UNIONed with raw batch
-   rows, winner per key = max(lsn, commit_ts, fingerprint) — in-batch
-   dedup and target-vs-batch conflict resolution are the same max, so
-   there is no separate dedup shuffle and no join anywhere;
+   affected-bucket list in a single pass); for a merge-on-read batch or a
+   DENSE one (Catalyst row estimate says every bucket is touched) the
+   scan is skipped entirely and the counts ride the write as an
+   Observation;
+2. one fused LWW aggregation: (for copy-on-write) pruned-target rows
+   UNIONed with raw batch rows, winner per key = max(lsn, commit_ts,
+   fingerprint) — in-batch dedup and target-vs-batch conflict
+   resolution are the same max, so there is no separate dedup shuffle
+   and no join anywhere;
 3. the aggregation is CLUSTERED ON THE STORAGE BUCKET
    (``lww_winner(cluster_col=_bucket)``): one explicit
    ``repartition(n, bucket)`` satisfies both the groupBy's clustering
    requirement AND the bucket-partitioned write's layout, so the full
    row payload (token arrays) crosses exactly ONE shuffle per merge —
-   the floor for a copy-on-write rewrite.  The previous shape
-   (groupBy(key) + write-side repartition(bucket), plus a salted
-   pre-reduce when enabled) moved the same payload 2–3x through the
-   memory subsystem, which BENCH/roofline.md measured as the throughput
-   ceiling on a single socket;
-then the affected buckets are rewritten and the commit (data files +
-batch manifest + per-bucket lineage) is atomic.  At 100 TB a batch
-touching 1% of buckets reads/writes 1% of the table; a bulk-load batch
-pays a single pass over its data.
+   the floor for a copy-on-write rewrite (BENCH/shuffle_bytes.md and
+   BENCH/roofline.md measured the cost of any second payload crossing);
+then the affected buckets are rewritten (or, merge-on-read, the deltas
+appended) and the commit (data files + batch manifest + per-bucket
+lineage) is atomic.  At 100 TB a batch touching 1% of buckets
+reads/writes 1% of the table; a bulk-load batch pays a single pass over
+its data.
 """
 
 from __future__ import annotations
 
+import time
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -164,7 +166,6 @@ def merge_into(
     mode: str = "cow",
     max_conflict_retries: int = 2,
     dense: bool | None = None,
-    clustered: bool = True,
 ) -> dict[str, Any]:
     """Apply one change batch exactly-once. Returns the lineage manifest.
 
@@ -185,32 +186,35 @@ def merge_into(
       of rows per bucket — the main write-amplification risk of CoW at
       10^10-event scale.  Modes can be mixed batch-by-batch on one table.
 
+    ``dense`` (CoW only): True skips the bucket-pruning stats job and
+    rewrites every bucket, False always runs it; None (default) decides
+    from the metadata-only row estimate (module docstring §1).
+
     ``max_conflict_retries``: a ConcurrentModificationError means another
     writer changed an affected bucket between this merge's planning
     snapshot and its commit; the merge is simply RE-PLANNED against the
     new snapshot (the whole function is a pure function of table state +
     batch, and the epoch fence re-check makes the retry replay-safe).
     After the retries are exhausted the error propagates.
-
-    ``clustered``: bucket-cluster the LWW aggregation so the payload
-    crosses one shuffle instead of two (module docstring §3).  True is
-    correct everywhere; False re-plans the legacy groupBy(key) +
-    write-repartition shape, kept ONLY for the A/B harness
-    (bench_shuffle.py) that documents the bytes/event difference.
     """
     from tickers_daily_intraday_etl_spark.lake.table import ConcurrentModificationError
 
     attempt = 0
     while True:
         try:
-            return _merge_once(
-                table, changes, batch_id, salt_partitions, extra_manifest, mode, dense,
-                clustered,
-            )
+            return _merge_once(table, changes, batch_id, salt_partitions, extra_manifest, mode, dense)
         except ConcurrentModificationError:
             if attempt >= max_conflict_retries:
                 raise
             attempt += 1
+
+
+def _rows_per_bucket(adds: list[dict[str, Any]]) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for a in adds:
+        b = str(a["bucket"])
+        out[b] = out.get(b, 0) + a["rows"]
+    return out
 
 
 def _merge_once(
@@ -220,24 +224,15 @@ def _merge_once(
     salt_partitions: int,
     extra_manifest: dict[str, Any] | None,
     mode: str,
-    dense: bool | None = None,
-    clustered: bool = True,
+    dense: bool | None,
 ) -> dict[str, Any]:
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode {mode!r} (expected 'cow' or 'mor')")
-    import time as _time
-
     if batch_id is not None and batch_id in table.committed_batch_ids():
         return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
 
-    _t0 = _time.time()
-
-    # NB: the batch is scanned twice in CoW mode (stats pass + merge) and
-    # is NOT persisted on purpose: building the columnar cache for
-    # array-typed rows costs ~3x the merge itself in CPU (lock/GC
-    # contention at high parallelism, measured 19.7s vs 6.7s for a
-    # 4M-event batch at local[32]); a parquet/file-source rescan is far
-    # cheaper.  MoR mode needs no separate pass at all (see below).
+    t0 = time.time()
+    cow = mode == "cow"
 
     # -- 1. pin the planning snapshot ONCE: schema, pruned target rows and
     #       the removes list all come from the same version, and _commit
@@ -245,106 +240,32 @@ def _merge_once(
     #       concurrent add-only commit's rows would be copied into our new
     #       files while its own files stay live -> duplicate keys).
     snap = table.log.snapshot()
-    current = table.stored_schema(version=snap.version)
-    incoming = T.StructType(S.payload_fields(changes.schema))
-    evolved = merge_schemas(current, incoming)
+    evolved = merge_schemas(
+        table.stored_schema(version=snap.version), T.StructType(S.payload_fields(changes.schema))
+    )
 
-    if mode == "mor":
-        # -- merge-on-read: ONE Spark job per batch.  No target read means
-        # no pre-merge bucket pruning is needed, so the stats pass fuses
-        # into the write via an Observation (rows_in / op counts collected
-        # while the data flows); the affected-bucket list falls out of the
-        # written files themselves.  In-batch LWW dedup is the same single
-        # shuffle as CoW, minus the target union; nothing is removed, so
-        # the commit is add-only and conflict-free.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = changes.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            *[
-                F.count(F.when(F.col(S.OP_COL) == o, 1)).alias(f"n_{o}")
-                for o in ("I", "U", "D")
-            ],
-        )
-        src = _to_stored_rows(observed, evolved).withColumn(BUCKET_COL, table.bucket_expr())
-        deduped = lww_winner(
-            src, table.key_col, LSN_COL, COMMIT_TS_COL,
-            salt_partitions=salt_partitions,
-            cluster_col=BUCKET_COL if clustered else None,
-            # row-target the exchange on the batch's metadata estimate
-            # (pre-dedup upper bound; deltas carry no target rows)
-            cluster_partitions=_cluster_partitions(table, _estimated_rows(changes)),
-        )
-        _t_plan = _time.time()
-        new_adds = table._write_data(
-            deduped, table.num_buckets, kind="delta", pre_partitioned=clustered
-        )
-        _t_write = _time.time()
-        metrics = obs.get
-        rows_in = int(metrics["rows_in"])
-        if rows_in == 0:
-            # Conditional-skip sink (reference: staging/load_staging_data.py:38-48)
-            # — still record the epoch so the fence holds.
-            version = table._commit([], [], evolved, {"batch_id": batch_id, "rows_in": 0})
-            return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
-        op_counts = {o: int(metrics[f"n_{o}"]) for o in ("I", "U", "D") if metrics[f"n_{o}"]}
-        affected = sorted({a["bucket"] for a in new_adds})
-        lineage = {
-            "batch_id": batch_id,
-            "mode": "mor",
-            "rows_in": rows_in,
-            "timings_sec": {
-                "stats": 0.0,  # fused into the write via Observation
-                "plan": round(_t_plan - _t0, 3),
-                "write": round(_t_write - _t_plan, 3),
-            },
-            "op_counts": op_counts,
-            "affected_buckets": affected,
-            "files_removed": 0,
-            "files_added": len(new_adds),
-            "rows_written": sum(a["rows"] for a in new_adds),
-        }
-        if extra_manifest:
-            lineage.update(extra_manifest)
-        version = table._commit(new_adds, [], evolved, lineage)
-        lineage["version"] = version
-        lineage["skipped"] = False
-        return lineage
-
-    # -- 2. learn the affected buckets.  DENSE batches (Catalyst row
-    #       estimate >= 8 rows/bucket, metadata-only) touch every bucket
-    #       with near-certainty, so the pre-merge stats scan cannot prune
-    #       anything — fuse rows_in/op-counts into the write via an
-    #       Observation (one fewer full batch scan per micro-batch, the
-    #       dominant FIXED cost of the CoW hot path).  Sparse batches
-    #       keep the pruning pre-scan: one small (op x bucket) aggregate
-    #       (<= 3 * num_buckets rows) that bounds the rewrite to the
-    #       touched fraction of the table.
+    # -- 2. learn the op counts.  A SPARSE CoW batch runs one small
+    #       (op x bucket) stats job (<= 3 * num_buckets rows) whose bucket
+    #       list bounds the rewrite to the touched fraction of the table.
+    #       MoR (no target read, nothing to prune) and DENSE CoW (the
+    #       metadata-only estimate says every bucket is touched) skip that
+    #       scan: rows_in / op counts ride the write as an Observation —
+    #       one fewer batch scan, the dominant FIXED cost per micro-batch.
+    #       NB: the batch is scanned twice on the sparse path and is NOT
+    #       persisted on purpose: the columnar cache for array-typed rows
+    #       costs ~3x the merge itself in CPU (measured 19.7s vs 6.7s for
+    #       a 4M-event batch at local[32]); a file-source rescan is cheaper.
     est = _estimated_rows(changes)  # metadata-only; reused for partition sizing
     if dense is None:  # auto: dense iff the estimate clears every bucket
         dense = est is not None and est >= max(
             _DENSE_BATCH_ROWS_PER_BUCKET * table.num_buckets, _DENSE_MIN_EST_ROWS
         )
-    obs = None
+    affected = set(range(table.num_buckets))
     op_counts: dict[str, int] = {}
-    affected_set: set[int] = set()
-    rows_in = -1  # unknown until the write runs (dense path)
-    if dense:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        changes = changes.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            *[
-                F.count(F.when(F.col(S.OP_COL) == o, 1)).alias(f"n_{o}")
-                for o in ("I", "U", "D")
-            ],
-        )
-        affected_set = set(range(table.num_buckets))
-    else:
+    stats_s = 0.0
+    obs = None
+    if cow and not dense:
+        t_stats = time.time()
         stats = (
             changes.select(S.OP_COL, table.bucket_expr().alias(BUCKET_COL))
             .groupBy(S.OP_COL, BUCKET_COL)
@@ -353,77 +274,89 @@ def _merge_once(
         )
         for r in stats:
             op_counts[r[S.OP_COL]] = op_counts.get(r[S.OP_COL], 0) + r["n"]
-            affected_set.add(r[BUCKET_COL])
+        affected = {r[BUCKET_COL] for r in stats}
         rows_in = sum(op_counts.values())
-        if rows_in == 0:
-            # Conditional-skip sink (reference: staging/load_staging_data.py:38-48)
-            # — still record the epoch so the fence holds.
-            version = table._commit([], [], table.stored_schema(), {"batch_id": batch_id, "rows_in": 0})
-            return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
-    affected = sorted(affected_set)
-    _t_stats = _time.time()
+        stats_s = time.time() - t_stats
+    else:
+        obs = Observation()
+        changes = changes.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_in"),
+            *[F.count(F.when(F.col(S.OP_COL) == o, 1)).alias(f"n_{o}") for o in ("I", "U", "D")],
+        )
+        rows_in = -1  # counted while the write runs
 
-    src = _to_stored_rows(changes, evolved).withColumn(BUCKET_COL, table.bucket_expr())
+    # -- 3. one fused union/LWW winner, clustered on the storage bucket
+    #       (single payload shuffle), then one pre-partitioned write.
+    old_adds: list[dict[str, Any]] = []
+    new_adds: list[dict[str, Any]] = []
+    if rows_in != 0:
+        src = _to_stored_rows(changes, evolved).withColumn(BUCKET_COL, table.bucket_expr())
+        if cow:
+            old_adds = [a for a in snap.live_files.values() if a["bucket"] in affected]
+            target = table.read_raw(version=snap.version, buckets=None if dense else sorted(affected))
+            target = align_to_schema(target, evolved).withColumn(BUCKET_COL, table.bucket_expr())
+            cols = [f.name for f in evolved.fields] + [BUCKET_COL]
+            # batch side on the LEFT: a union's Dataset inherits the left
+            # side's SparkSession, and inside foreachBatch the batch df
+            # lives in a CLONED session — the Observation listener
+            # registers there, so the write must execute there too or
+            # `obs.get` waits forever on a listener bus that never fires
+            # (the round-4 hang)
+            src = src.select(*cols).unionByName(target.select(*cols))
+        # union volume estimate, all metadata: exact batch rows when the
+        # stats job ran, else the Catalyst estimate, plus the pruned
+        # target's committed row counts from the snapshot
+        batch_rows = rows_in if rows_in >= 0 else est
+        est_rows = None if batch_rows is None else batch_rows + sum(a["rows"] for a in old_adds)
+        merged = lww_winner(
+            src, table.key_col, LSN_COL, COMMIT_TS_COL,
+            salt_partitions=salt_partitions,
+            cluster_col=BUCKET_COL,
+            cluster_partitions=_cluster_partitions(table, est_rows),
+        )
+        t_plan = time.time()
+        new_adds = table._write_data(
+            merged, len(affected), kind="base" if cow else "delta", pre_partitioned=True
+        )
+        t_write = time.time()
+        if obs is not None:
+            # an empty metrics row means adaptive execution proved the
+            # observed input empty and pruned the observation with it
+            # (an empty MoR batch, whose plan has no target side)
+            metrics = obs.get if obs._jo.getRow().length() else {}
+            rows_in = int(metrics.get("rows_in", 0))
+            op_counts = {o: int(metrics[f"n_{o}"]) for o in ("I", "U", "D") if metrics.get(f"n_{o}")}
 
-    # -- 3. bucket pruning + fused union/LWW winner (single shuffle)
-    old_adds = [a for a in snap.live_files.values() if a["bucket"] in affected_set]
-    target = table.read_raw(version=snap.version, buckets=None if dense else affected)
-    target = align_to_schema(target, evolved).withColumn(BUCKET_COL, table.bucket_expr())
-    cols = [f.name for f in evolved.fields] + [BUCKET_COL]
-    # batch side on the LEFT: a union's Dataset inherits the left side's
-    # SparkSession, and inside foreachBatch the batch df lives in a
-    # CLONED session — the dense path's Observation listener registers
-    # there, so the write must execute there too or `obs.get` waits
-    # forever on a listener bus that never fires (the round-4 hang)
-    unioned = src.select(*cols).unionByName(target.select(*cols))
-    # union volume estimate, all metadata: exact batch rows when the
-    # sparse stats pass ran (rows_in), else the Catalyst estimate, plus
-    # the pruned target's committed row counts from the snapshot
-    target_rows = sum(a["rows"] for a in old_adds)
-    batch_rows = rows_in if rows_in >= 0 else est
-    est_union = None if batch_rows is None else batch_rows + target_rows
-    merged = lww_winner(
-        unioned, table.key_col, LSN_COL, COMMIT_TS_COL,
-        salt_partitions=salt_partitions,
-        cluster_col=BUCKET_COL if clustered else None,
-        cluster_partitions=_cluster_partitions(table, est_union),
-    )
+    if rows_in == 0:
+        # Conditional-skip sink (reference: staging/load_staging_data.py:38-48)
+        # — still record the epoch so the fence holds.  Files an observed
+        # write produced stay uncommitted orphans for vacuum's min-age sweep.
+        version = table._commit([], [], evolved, {"batch_id": batch_id, "rows_in": 0})
+        return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
 
-    # -- 4. rewrite affected buckets; atomic commit with manifest
-    _t_plan = _time.time()
-    new_adds = table._write_data(merged, len(affected), pre_partitioned=clustered)
-    _t_write = _time.time()
-    if dense:
-        metrics = obs.get
-        rows_in = int(metrics["rows_in"])
-        if rows_in == 0:
-            # the estimate was wrong and the rewrite was an identity —
-            # commit ONLY the epoch fence; the just-written files stay
-            # uncommitted orphans for vacuum's min-age sweep
-            version = table._commit([], [], evolved, {"batch_id": batch_id, "rows_in": 0})
-            return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
-        op_counts = {o: int(metrics[f"n_{o}"]) for o in ("I", "U", "D") if metrics[f"n_{o}"]}
-    lineage = {
+    # -- 4. atomic commit with the lineage manifest.  MoR is add-only and
+    #       conflict-free; CoW's removes are validated against the pinned
+    #       snapshot for the buckets it rewrites.
+    lineage: dict[str, Any] = {
         "batch_id": batch_id,
         "rows_in": rows_in,
         "timings_sec": {
-            "stats": round(_t_stats - _t0, 3),
-            "plan": round(_t_plan - _t_stats, 3),
-            "write": round(_t_write - _t_plan, 3),
+            "stats": round(stats_s, 3),
+            "plan": round(t_plan - t0 - stats_s, 3),
+            "write": round(t_write - t_plan, 3),
         },
         "op_counts": op_counts,
-        "affected_buckets": affected,
-        "rows_before": {},
-        "rows_after": {},
+        "affected_buckets": sorted(affected) if cow else sorted({a["bucket"] for a in new_adds}),
         "files_removed": len(old_adds),
         "files_added": len(new_adds),
     }
-    for a in old_adds:
-        b = str(a["bucket"])
-        lineage["rows_before"][b] = lineage["rows_before"].get(b, 0) + a["rows"]
-    for a in new_adds:
-        b = str(a["bucket"])
-        lineage["rows_after"][b] = lineage["rows_after"].get(b, 0) + a["rows"]
+    if cow:
+        lineage["rows_before"] = _rows_per_bucket(old_adds)
+        lineage["rows_after"] = _rows_per_bucket(new_adds)
+    else:
+        lineage["mode"] = "mor"
+        lineage["rows_written"] = sum(a["rows"] for a in new_adds)
     if extra_manifest:
         lineage.update(extra_manifest)
     version = table._commit(
@@ -431,8 +364,8 @@ def _merge_once(
         [a["path"] for a in old_adds],
         evolved,
         lineage,
-        base_version=snap.version,
-        affected_buckets=affected_set,
+        base_version=snap.version if cow else None,
+        affected_buckets=affected if cow else None,
     )
     lineage["version"] = version
     lineage["skipped"] = False

@@ -1303,8 +1303,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL plumbing (binary column + typed metadata + mapInPandas Arrow
     batches); the payloads are md5-hex bytes so a SQL oracle reproduces
     every feature value exactly.  The codec itself remains the declared
-    sandbox stub (decode_backend='real' raises); the kernel is also
-    pinned by a golden pytest."""
+    stub; the kernel is also pinned by a golden pytest."""
     from tickers_daily_intraday_etl_spark.functions import multimodal
 
     feats = multimodal.extract_features(multimodal.synthetic_media_oracle(spark, n=128))
