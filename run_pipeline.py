@@ -114,7 +114,8 @@ def main() -> None:
         json.dumps(
             {
                 "rows_in": rows,
-                "batches": len(lineage),
+                # lineage also carries {"maintenance": ...} entries
+                "batches": sum(1 for m in lineage if "batch_id" in m),
                 "sec": round(dt, 2),
                 "events_per_sec": round(rows / dt, 1) if dt > 0 else None,
                 "table_version": pipe.table.log.latest_version(),

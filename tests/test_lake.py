@@ -268,3 +268,78 @@ def test_zone_map_stats_survive_checkpoint_fold(spark, tmpdir_path, monkeypatch)
     assert sum(a["rows"] for a in pruned) == 5
     out = t2.read_incremental("n_tok", lo=21)
     assert sorted(r.n_tok for r in out.collect()) == list(range(21, 26))
+
+
+def _cow_then_mor_with_deletes(spark, path):
+    """4-bucket table: one CoW batch inserting k00..k39, then one MoR
+    batch over every other key, a fifth of it deletes (k00, k10, k20,
+    k30).  Every bucket ends up holding a base file and a delta file."""
+    import datetime as dt
+
+    from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
+    from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA, TARGET_SCHEMA
+
+    t = LakeTable.create_if_not_exists(spark, path, TARGET_SCHEMA, num_buckets=4)
+
+    def ev(i, op, lsn):
+        return Row(op=op, doc_id=f"k{i:02d}", lsn=lsn,
+                   commit_ts=dt.datetime(2024, 1, 1) + dt.timedelta(seconds=lsn),
+                   tokens=[i, lsn], n_tok=2, source="s")
+
+    merge_into(t, spark.createDataFrame([ev(i, "I", 1 + i) for i in range(40)], CDC_SCHEMA), batch_id=0)
+    mor = [ev(i, "D" if i % 10 == 0 else "U", 100 + i) for i in range(0, 40, 2)]
+    merge_into(t, spark.createDataFrame(mor, CDC_SCHEMA), batch_id=1, mode="mor")
+    assert t.has_deltas()
+    return t
+
+
+def _compact_after_first_snapshot(spark, t):
+    """Hook ``t.log.snapshot`` so that, right after its first call
+    returns, a second handle on the same table compacts it — a commit
+    landing in the middle of whatever read ``t`` is running."""
+    from tickers_daily_intraday_etl_spark.lake.maintenance import compact
+
+    orig = t.log.snapshot
+    fired = []
+
+    def hooked(version=None):
+        snap = orig(version)
+        if not fired:
+            fired.append(compact(LakeTable.load(spark, t.path)))
+        return snap
+
+    t.log.snapshot = hooked
+    return fired
+
+
+def test_reads_see_one_version_under_concurrent_compaction(spark, tmpdir_path):
+    """One read sees one committed version: a compaction committing after
+    the read resolved its snapshot must not leak in.  Mixing the two
+    versions (the old files with the new version's "no deltas left")
+    returns base and delta rows unresolved — duplicate keys and deleted
+    keys coming back."""
+    deleted = {"k00", "k10", "k20", "k30"}
+
+    def rows(df):
+        return sorted((r.doc_id, list(r.tokens)) for r in df.collect())
+
+    t = _cow_then_mor_with_deletes(spark, os.path.join(tmpdir_path, "read"))
+    expected = rows(t.read())
+    assert len(expected) == 36 and not deleted & {k for k, _ in expected}
+
+    fired = _compact_after_first_snapshot(spark, t)
+    got = rows(t.read())
+    assert fired and fired[0]["compacted_buckets"] == 4
+    assert len({k for k, _ in got}) == len(got)  # one row per key
+    assert not deleted & {k for k, _ in got}
+    assert got == expected
+
+    t = _cow_then_mor_with_deletes(spark, os.path.join(tmpdir_path, "incremental"))
+    fired = _compact_after_first_snapshot(spark, t)
+    assert rows(t.read_incremental("n_tok")) == expected
+    assert fired and fired[0]["compacted_buckets"] == 4
+
+    t = _cow_then_mor_with_deletes(spark, os.path.join(tmpdir_path, "lookup"))
+    fired = _compact_after_first_snapshot(spark, t)
+    assert t.lookup("k10").collect() == []
+    assert fired and fired[0]["compacted_buckets"] == 4

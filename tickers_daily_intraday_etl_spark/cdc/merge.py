@@ -228,21 +228,19 @@ def _merge_once(
 ) -> dict[str, Any]:
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode {mode!r} (expected 'cow' or 'mor')")
-    if batch_id is not None and batch_id in table.committed_batch_ids():
-        return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
-
     t0 = time.time()
     cow = mode == "cow"
 
-    # -- 1. pin the planning snapshot ONCE: schema, pruned target rows and
-    #       the removes list all come from the same version, and _commit
-    #       aborts if an affected bucket gained files after it (otherwise a
-    #       concurrent add-only commit's rows would be copied into our new
-    #       files while its own files stay live -> duplicate keys).
+    # -- 1. pin the planning snapshot ONCE: the epoch fence, schema, pruned
+    #       target rows and the removes list all come from the same
+    #       version, and _commit aborts if an affected bucket gained files
+    #       after it (otherwise a concurrent add-only commit's rows would
+    #       be copied into our new files while its own files stay live ->
+    #       duplicate keys).
     snap = table.log.snapshot()
-    evolved = merge_schemas(
-        table.stored_schema(version=snap.version), T.StructType(S.payload_fields(changes.schema))
-    )
+    if batch_id is not None and batch_id in snap.committed_batch_ids:
+        return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
+    evolved = merge_schemas(table._schema(snap), T.StructType(S.payload_fields(changes.schema)))
 
     # -- 2. learn the op counts.  A SPARSE CoW batch runs one small
     #       (op x bucket) stats job (<= 3 * num_buckets rows) whose bucket
@@ -294,7 +292,7 @@ def _merge_once(
         src = _to_stored_rows(changes, evolved).withColumn(BUCKET_COL, table.bucket_expr())
         if cow:
             old_adds = [a for a in snap.live_files.values() if a["bucket"] in affected]
-            target = table.read_raw(version=snap.version, buckets=None if dense else sorted(affected))
+            target = table._scan(snap, buckets=None if dense else sorted(affected))
             target = align_to_schema(target, evolved).withColumn(BUCKET_COL, table.bucket_expr())
             cols = [f.name for f in evolved.fields] + [BUCKET_COL]
             # batch side on the LEFT: a union's Dataset inherits the left

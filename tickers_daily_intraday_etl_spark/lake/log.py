@@ -294,8 +294,8 @@ class VersionNotRetained(Exception):
 
 
 class CommitLog:
-    # how many folded snapshots to memoize per log (a merge asks for the
-    # same version several times: planning, schema, pruned read, commit)
+    # how many folded snapshots to memoize per log (a commit re-reads the
+    # version it planned from on conflict; vacuum walks its retention window)
     _SNAP_CACHE_SIZE = 8
 
     def __init__(self, table_path: str, store: LogStore | None = None):
@@ -352,55 +352,28 @@ class CommitLog:
         Files touched: 1 pointer GET + (#commits since that floor) + 1
         existence probes — bounded by the checkpoint interval on any
         table that checkpoints, regardless of total table age."""
-        floor = self._latest_seen
-        ptr = self._pointer_version()
-        if ptr is not None and ptr > floor:
-            floor = ptr
-        if floor < 0:
-            # no checkpoint yet (young table: < CHECKPOINT_INTERVAL
-            # commits) and nothing observed — probe from v0; bounded by
-            # the checkpoint interval since older tables have a pointer
-            if not self.store.exists(self._entry_name(0)):
-                # v0 missing can ALSO mean an expired log whose
-                # _last_checkpoint pointer is gone (lost overwrite race
-                # at the first checkpoint, or a crash inside expire_log):
-                # entries exist above the retained floor but nothing
-                # below.  Recover with the same one-LIST fallback the
-                # stale-pointer case uses before declaring the table
-                # empty.  (Genuinely empty logs pay one LIST of an empty
-                # dir here — create-time only, never the hot path.)
-                entries = [
-                    int(n[1:-5])
-                    for n in self.store.list_names()
-                    if n.startswith("v") and n.endswith(".json")
-                ]
-                if not entries:
-                    return None
-                v = max(entries)
-                self._latest_seen = v
-                return v
-            floor = 0
-        v = floor
+        # no checkpoint yet (young table: < CHECKPOINT_INTERVAL commits)
+        # and nothing observed: probe from v0 — bounded by the checkpoint
+        # interval, since older tables have a pointer
+        floor = v = max(self._latest_seen, self._pointer_version() or 0)
         while self.store.exists(self._entry_name(v + 1)):
             v += 1
         if v == floor and not self.store.exists(self._entry_name(v)):
-            # The floor hint landed in an EXPIRED region: a stale
-            # ``_last_checkpoint`` pointer (crash between a checkpoint's
-            # put_if_absent and the pointer overwrite, or a lost
-            # pointer race) can sit below ``expire_log``'s retained
-            # floor, where both the entry and its checkpoint are gone —
-            # the forward probe then sees nothing and would silently
-            # return a version ``snapshot()`` cannot reconstruct.
-            # Recover with one LIST (rare: never taken while the
-            # pointer is healthy, so the hot path stays LIST-free).
-            entries = [
-                int(n[1:-5])
-                for n in self.store.list_names()
-                if n.startswith("v") and n.endswith(".json")
-            ]
+            # The floor landed in an EXPIRED region (or the log is empty):
+            # a stale ``_last_checkpoint`` pointer (crash between a
+            # checkpoint's put_if_absent and the pointer overwrite, or a
+            # lost pointer race) can sit below ``expire_log``'s retained
+            # floor, where both the entry and its checkpoint are gone; a
+            # MISSING pointer over an expired log leaves v0 gone too.
+            # The forward probe then sees nothing and would silently
+            # return a version ``snapshot()`` cannot reconstruct (or call
+            # the table empty).  Recover with one LIST (rare: never taken
+            # while the pointer is healthy, so the hot path stays
+            # LIST-free; a genuinely empty log pays it at create time).
+            entries = self.versions()
             if not entries:
                 return None
-            v = max(entries)
+            v = entries[-1]
         self._latest_seen = v
         return v
 

@@ -12,9 +12,10 @@ from __future__ import annotations
 import os
 from typing import Any
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from tickers_daily_intraday_etl_spark.lake.log import VersionNotRetained
+from tickers_daily_intraday_etl_spark.lake.log import Snapshot, VersionNotRetained
 from tickers_daily_intraday_etl_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
@@ -23,59 +24,68 @@ from tickers_daily_intraday_etl_spark.lake.table import (
 )
 
 
+def buckets_over(
+    snap: Snapshot,
+    max_files_per_bucket: int | None = None,
+    max_delta_files_per_bucket: int | None = None,
+) -> dict[int, list[dict[str, Any]]]:
+    """Buckets of ``snap`` whose live files exceed a threshold (pass None
+    to disable one), mapped to their add-records.  Commit-log metadata
+    only: no Spark job, no filesystem probe."""
+    by_bucket: dict[int, list[dict[str, Any]]] = {}
+    for a in snap.live_files.values():
+        by_bucket.setdefault(a["bucket"], []).append(a)
+
+    def over(adds: list[dict[str, Any]]) -> bool:
+        n_delta = sum(a.get("kind") == "delta" for a in adds)
+        return (max_files_per_bucket is not None and len(adds) > max_files_per_bucket) or (
+            max_delta_files_per_bucket is not None and n_delta > max_delta_files_per_bucket
+        )
+
+    return {b: adds for b, adds in by_bucket.items() if over(adds)}
+
+
+def _rewrite_buckets(
+    table: LakeTable, snap: Snapshot, buckets: list[int], manifest: dict[str, Any], keep: Column | None = None
+) -> dict[str, Any]:
+    """Rewrite ``buckets`` from their resolved rows at ``snap`` (filtered
+    by the ``keep`` predicate, if any) into one base file per bucket,
+    replacing exactly the files that were read, under ``snap``'s schema."""
+    df = table._resolved(snap, buckets)
+    if keep is not None:
+        df = df.where(keep)
+    new_adds = table._write_data(df.withColumn(BUCKET_COL, table.bucket_expr()), len(buckets))
+    want = set(buckets)
+    removes = [p for p, a in snap.live_files.items() if a["bucket"] in want]
+    version = table._commit(new_adds, removes, table._schema(snap), manifest)
+    return {"files_removed": len(removes), "files_added": len(new_adds), "version": version}
+
+
 def compact(
     table: LakeTable,
     max_files_per_bucket: int | None = 1,
     max_delta_files_per_bucket: int | None = None,
-    max_delta_rows_per_bucket: int | None = None,
 ) -> dict[str, Any]:
     """Rewrite buckets that exceed a threshold into one file each.
     Metadata-only for untouched buckets.  Merge-on-read delta files are
-    FOLDED here (read_resolved applies the LWW total order), so the
+    FOLDED here (the rewrite applies the LWW total order), so the
     rewritten buckets come out as plain base files with one row per key
     again.
 
-    Thresholds (a bucket qualifying under ANY is rewritten; pass None to
-    disable one):
+    Thresholds (``buckets_over``; a bucket qualifying under either is
+    rewritten, pass None to disable one):
     * ``max_files_per_bucket`` — total live files (base + delta);
-    * ``max_delta_files_per_bucket`` / ``max_delta_rows_per_bucket`` —
-      merge-on-read delta pressure only.  A skewed feed concentrates
-      deltas in its hot buckets; a count-of-batches cadence would either
-      over-compact the cold buckets or let the hot one accumulate
-      unbounded deltas (every read of it LWW-resolves the whole pile).
-      Size-based triggers fold exactly the hot buckets (row counts come
-      straight from the commit log — no filesystem probing)."""
+    * ``max_delta_files_per_bucket`` — merge-on-read delta pressure only.
+      A skewed feed concentrates deltas in its hot buckets; a
+      count-of-batches cadence would either over-compact the cold buckets
+      or let the hot one accumulate unbounded deltas (every read of it
+      LWW-resolves the whole pile).  The size-based trigger folds exactly
+      the hot buckets."""
     snap = table.log.snapshot()
-    by_bucket: dict[int, list[dict]] = {}
-    for a in snap.live_files.values():
-        by_bucket.setdefault(a["bucket"], []).append(a)
-
-    def _fat(adds: list[dict]) -> bool:
-        if max_files_per_bucket is not None and len(adds) > max_files_per_bucket:
-            return True
-        deltas = [a for a in adds if a.get("kind") == "delta"]
-        if max_delta_files_per_bucket is not None and len(deltas) > max_delta_files_per_bucket:
-            return True
-        if max_delta_rows_per_bucket is not None and sum(
-            a["rows"] for a in deltas
-        ) > max_delta_rows_per_bucket:
-            return True
-        return False
-
-    fat = {b: adds for b, adds in by_bucket.items() if _fat(adds)}
-    if not fat:
+    buckets = sorted(buckets_over(snap, max_files_per_bucket, max_delta_files_per_bucket))
+    if not buckets:
         return {"compacted_buckets": 0, "files_removed": 0, "files_added": 0}
-    buckets = sorted(fat)
-    df = table.read_resolved(buckets=buckets).withColumn(BUCKET_COL, table.bucket_expr())
-    new_adds = table._write_data(df, len(buckets))
-    removes = [a["path"] for adds in fat.values() for a in adds]
-    version = table._commit(new_adds, removes, table.stored_schema(), {"op": "compact"})
-    return {
-        "compacted_buckets": len(buckets),
-        "files_removed": len(removes),
-        "files_added": len(new_adds),
-        "version": version,
-    }
+    return {"compacted_buckets": len(buckets), **_rewrite_buckets(table, snap, buckets, {"op": "compact"})}
 
 
 def purge_tombstones(table: LakeTable, lsn_low_water_mark: int) -> dict[str, Any]:
@@ -83,33 +93,19 @@ def purge_tombstones(table: LakeTable, lsn_low_water_mark: int) -> dict[str, Any
     mark — no change event with a lower LSN can ever arrive, so the
     tombstone can no longer lose an LWW comparison it needs to win."""
     snap = table.log.snapshot()
-    # read_resolved, NOT read_raw: on a merge-on-read table a raw scan
+    # resolved rows, NOT the raw scan: on a merge-on-read table a raw scan
     # still holds superseded row versions — purging a winning tombstone
     # while a stale non-deleted version of the same key survives would
     # resurrect it.  Resolution keeps only winners, so dropping a
     # below-LWM tombstone is safe (nothing older can ever arrive).
-    tombstoned = (
-        table.read_resolved()
-        .where(F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col(LSN_COL) < lsn_low_water_mark))
-        .select(table.bucket_expr().alias(BUCKET_COL))
-        .distinct()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in tombstoned)
+    purgeable = F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col(LSN_COL) < lsn_low_water_mark)
+    tombstoned = table._resolved(snap).where(purgeable).select(table.bucket_expr().alias(BUCKET_COL))
+    buckets = sorted(r[BUCKET_COL] for r in tombstoned.distinct().collect())
     if not buckets:
         return {"purged_buckets": 0, "version": snap.version}
-    keep = table.read_resolved(buckets=buckets).where(
-        ~(F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col(LSN_COL) < lsn_low_water_mark))
-    )
-    keep = keep.withColumn(BUCKET_COL, table.bucket_expr())
-    new_adds = table._write_data(keep, len(buckets))
-    removes = [
-        a["path"] for a in snap.live_files.values() if a["bucket"] in set(buckets)
-    ]
-    version = table._commit(
-        new_adds, removes, table.stored_schema(), {"op": "purge_tombstones", "lwm": lsn_low_water_mark}
-    )
-    return {"purged_buckets": len(buckets), "version": version}
+    manifest = {"op": "purge_tombstones", "lwm": lsn_low_water_mark}
+    out = _rewrite_buckets(table, snap, buckets, manifest, keep=~purgeable)
+    return {"purged_buckets": len(buckets), "version": out["version"]}
 
 
 def vacuum(

@@ -29,10 +29,16 @@ Scale design (for a 1000-executor cluster over ~100 TB):
   the canonical schema at commit time; old files are never rewritten —
   reads align every file group to the canonical schema (missing columns
   null-filled, narrow types cast).
+* Every public read and maintenance operation sees exactly one committed
+  version: its entry point resolves ``log.snapshot(version)`` once and
+  passes that pinned ``Snapshot`` to the private scan, resolution,
+  schema and visibility helpers.  Only ``_commit``'s optimistic retry
+  loop re-reads the latest version.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from typing import Any
@@ -41,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tickers_daily_intraday_etl_spark.lake.log import CommitConflict, CommitLog, LogEntry
+from tickers_daily_intraday_etl_spark.lake.log import CommitConflict, CommitLog, LogEntry, Snapshot
 
 # Internal columns stored in every data file (not part of the user schema).
 LSN_COL = "_lsn"
@@ -232,8 +238,7 @@ class LakeTable:
 
     # ----------------------------------------------------------- schema ops
     def stored_schema(self, version: int | None = None) -> T.StructType:
-        snap = self.log.snapshot(version)
-        return T.StructType.fromJson(__import__("json").loads(snap.schema_json))
+        return self._schema(self.log.snapshot(version))
 
     def user_schema(self, version: int | None = None) -> T.StructType:
         internal = {LSN_COL, COMMIT_TS_COL, DELETED_COL}
@@ -243,26 +248,14 @@ class LakeTable:
         key = F.col(self.key_col) if key is None else key
         return F.pmod(F.xxhash64(key), F.lit(self.num_buckets)).cast("int")
 
-    # ------------------------------------------------------------- read side
-    def _read_files(self, snap, adds: list[dict[str, Any]]) -> DataFrame | None:
-        """Read a set of data files, aligning each schema-version group to
-        the canonical schema (schema evolution without rewrites)."""
-        if not adds:
-            return None
-        canonical = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
-        groups: dict[int, list[str]] = {}
-        for a in adds:
-            groups.setdefault(a["schema_version"], []).append(os.path.join(self.path, a["path"]))
-        parts: list[DataFrame] = []
-        for sv, paths in sorted(groups.items()):
-            file_schema = T.StructType.fromJson(__import__("json").loads(snap.schemas[sv]))
-            df = self.spark.read.schema(file_schema).parquet(*paths)
-            parts.append(align_to_schema(df, canonical))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    @staticmethod
+    def _schema(snap: Snapshot, schema_version: int | None = None) -> T.StructType:
+        """The canonical schema at ``snap``, or with ``schema_version``
+        the schema that version's data files were written under."""
+        js = snap.schema_json if schema_version is None else snap.schemas[schema_version]
+        return T.StructType.fromJson(json.loads(js))
 
+    # ------------------------------------------------------------- read side
     @staticmethod
     def _prune_adds_by_bounds(
         adds: list[dict[str, Any]], bounds: dict[str, tuple[Any, Any]]
@@ -286,6 +279,58 @@ class LakeTable:
                 out.append(a)
         return out
 
+    def _scan(
+        self,
+        snap: Snapshot,
+        buckets: list[int] | None = None,
+        bounds: dict[str, tuple[Any, Any]] | None = None,
+    ) -> DataFrame:
+        """The live files of ``snap`` (pruned by bucket and zone-map
+        bounds), each schema-version group aligned to the canonical
+        schema (schema evolution without rewrites)."""
+        adds = list(snap.live_files.values())
+        if buckets is not None:
+            want = set(buckets)
+            adds = [a for a in adds if a["bucket"] in want]
+        if bounds:
+            adds = self._prune_adds_by_bounds(adds, bounds)
+        canonical = self._schema(snap)
+        if not adds:
+            return self.spark.createDataFrame([], canonical)
+        groups: dict[int, list[str]] = {}
+        for a in adds:
+            groups.setdefault(a["schema_version"], []).append(os.path.join(self.path, a["path"]))
+        parts = [
+            align_to_schema(self.spark.read.schema(self._schema(snap, sv)).parquet(*paths), canonical)
+            for sv, paths in sorted(groups.items())
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    @staticmethod
+    def _delta_buckets(snap: Snapshot) -> set[int]:
+        """Buckets holding a live merge-on-read delta file."""
+        return {a["bucket"] for a in snap.live_files.values() if a.get("kind") == "delta"}
+
+    def _resolved(self, snap: Snapshot, buckets: list[int] | None = None) -> DataFrame:
+        """``_scan`` with merge-on-read resolution when ``snap`` has live
+        deltas (no extra shuffle otherwise)."""
+        raw = self._scan(snap, buckets)
+        if not self._delta_buckets(snap):
+            return raw
+        from tickers_daily_intraday_etl_spark.cdc.dedup import lww_winner
+
+        return lww_winner(raw, self.key_col, LSN_COL, COMMIT_TS_COL)
+
+    @staticmethod
+    def _visible(df: DataFrame) -> DataFrame:
+        """Drop tombstones and the internal columns."""
+        return df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
+            LSN_COL, COMMIT_TS_COL, DELETED_COL
+        )
+
     def read_raw(
         self,
         version: int | None = None,
@@ -300,24 +345,12 @@ class LakeTable:
         and on a merge-on-read table, pruning before LWW resolution is
         only sound for predicates on immutable-per-key columns (use
         ``read_incremental`` for the guarded form)."""
-        snap = self.log.snapshot(version)
-        adds = list(snap.live_files.values())
-        if buckets is not None:
-            want = set(buckets)
-            adds = [a for a in adds if a["bucket"] in want]
-        if bounds:
-            adds = self._prune_adds_by_bounds(adds, bounds)
-        df = self._read_files(snap, adds)
-        if df is None:
-            schema = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
-            return self.spark.createDataFrame([], schema)
-        return df
+        return self._scan(self.log.snapshot(version), buckets, bounds)
 
     def has_deltas(self, version: int | None = None) -> bool:
         """True if any live file is a merge-on-read delta (holds candidate
         row versions that must be LWW-resolved at read time)."""
-        snap = self.log.snapshot(version)
-        return any(a.get("kind") == "delta" for a in snap.live_files.values())
+        return bool(self._delta_buckets(self.log.snapshot(version)))
 
     def read_resolved(self, version: int | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Stored rows with merge-on-read resolution applied: when delta
@@ -326,20 +359,12 @@ class LakeTable:
         copy-on-write merge applies at write time, so a table is free to
         mix modes batch-by-batch.  Without deltas this is read_raw (no
         extra shuffle)."""
-        raw = self.read_raw(version, buckets=buckets)
-        if not self.has_deltas(version):
-            return raw
-        from tickers_daily_intraday_etl_spark.cdc.dedup import lww_winner
-
-        return lww_winner(raw, self.key_col, LSN_COL, COMMIT_TS_COL)
+        return self._resolved(self.log.snapshot(version), buckets)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Current visible rows (MoR-resolved, tombstones filtered,
         internal cols dropped)."""
-        raw = self.read_resolved(version)
-        return raw.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
-            LSN_COL, COMMIT_TS_COL, DELETED_COL
-        )
+        return self._visible(self._resolved(self.log.snapshot(version)))
 
     def read_incremental(
         self, col: str, lo: Any = None, hi: Any = None, version: int | None = None
@@ -362,8 +387,9 @@ class LakeTable:
         O(files-in-window + files-in-hot-buckets), not O(table)."""
         import datetime as _dt
 
+        snap = self.log.snapshot(version)
         is_time_col = isinstance(
-            self.stored_schema(version)[col].dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
+            self._schema(snap)[col].dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
         )
 
         def _b(v: Any) -> Any:
@@ -377,22 +403,14 @@ class LakeTable:
             return v
 
         bounds = {col: (_b(lo), _b(hi))}
-        snap = self.log.snapshot(version)
-        delta_buckets = sorted(
-            {a["bucket"] for a in snap.live_files.values() if a.get("kind") == "delta"}
-        )
+        delta_buckets = self._delta_buckets(snap)
         if delta_buckets:
-            clean_buckets = sorted(
-                {a["bucket"] for a in snap.live_files.values()} - set(delta_buckets)
-            )
-            hot = self.read_resolved(version, buckets=delta_buckets)
+            clean_buckets = sorted({a["bucket"] for a in snap.live_files.values()} - delta_buckets)
+            raw = self._resolved(snap, sorted(delta_buckets))
             if clean_buckets:
-                clean = self.read_raw(version, buckets=clean_buckets, bounds=bounds)
-                raw = hot.unionByName(clean)
-            else:
-                raw = hot
+                raw = raw.unionByName(self._scan(snap, clean_buckets, bounds))
         else:
-            raw = self.read_raw(version, bounds=bounds)
+            raw = self._scan(snap, bounds=bounds)
         cond = F.lit(True)
         c = F.col(col)
         col_type = raw.schema[col].dataType
@@ -400,11 +418,7 @@ class LakeTable:
             cond = cond & (c >= F.lit(lo).cast(col_type))
         if hi is not None:
             cond = cond & (c <= F.lit(hi).cast(col_type))
-        return (
-            raw.where(cond)
-            .where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            .drop(LSN_COL, COMMIT_TS_COL, DELETED_COL)
-        )
+        return self._visible(raw.where(cond))
 
     def lookup(self, value: Any, version: int | None = None) -> DataFrame:
         """Point read: current visible row(s) whose key equals ``value``.
@@ -420,6 +434,7 @@ class LakeTable:
         remain."""
         from tickers_daily_intraday_etl_spark.cdc.dedup import lww_winner
 
+        snap = self.log.snapshot(version)
         # bucket of the literal, computed with the SAME hash the writer
         # used — keys hash across buckets, so without this every
         # bucket's base file survives pruning.  String keys hash
@@ -434,17 +449,14 @@ class LakeTable:
             # hashing: xxhash64 hashes an IntegerType literal over 4
             # bytes but a LongType column over 8, so an uncast Python
             # int probes the wrong bucket and silently returns empty
-            key_type = self.stored_schema(version)[self.key_col].dataType
+            key_type = self._schema(snap)[self.key_col].dataType
             bucket = self.spark.range(1).select(
                 self.bucket_expr(F.lit(value).cast(key_type))
             ).first()[0]
-        raw = self.read_raw(
-            version, buckets=[bucket], bounds={self.key_col: (value, value)}
-        ).where(F.col(self.key_col) == F.lit(value))
-        resolved = lww_winner(raw, self.key_col, LSN_COL, COMMIT_TS_COL)
-        return resolved.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
-            LSN_COL, COMMIT_TS_COL, DELETED_COL
+        raw = self._scan(snap, [bucket], {self.key_col: (value, value)}).where(
+            F.col(self.key_col) == F.lit(value)
         )
+        return self._visible(lww_winner(raw, self.key_col, LSN_COL, COMMIT_TS_COL))
 
     def committed_batch_ids(self) -> set:
         snap = self.log.snapshot()
@@ -613,8 +625,7 @@ class LakeTable:
             # read.  Our data files were written under OUR schema, so the
             # only safe resolutions are (a) ours is a superset -> commit,
             # (b) anything else -> abort and let the caller replan.
-            current = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
-            merged = merge_schemas(current, schema)
+            merged = merge_schemas(self._schema(snap), schema)
             # merge_schemas normalizes nullability; compare like-for-like
             normalized = T.StructType(
                 [T.StructField(f.name, f.dataType, True) for f in schema.fields]
@@ -627,7 +638,7 @@ class LakeTable:
             schema_json = schema.json()
             for a in adds:
                 # files written under the outgoing canonical schema
-                a["schema_version"] = version if schema_json != snap.schema_json else self._schema_version_of(snap)
+                a["schema_version"] = version if schema_json != snap.schema_json else max(snap.schemas, default=0)
             entry = LogEntry(
                 version=version,
                 schema_json=schema_json,
@@ -641,16 +652,9 @@ class LakeTable:
             except CommitConflict:
                 continue  # re-read snapshot, retry at next version
 
-    @staticmethod
-    def _schema_version_of(snap) -> int:
-        return max(snap.schemas) if snap.schemas else 0
-
     def append(self, df: DataFrame, manifest: dict[str, Any] | None = None) -> int:
         """Plain append (no key semantics) — schema-merged on write."""
-        snap = self.log.snapshot()
-        current = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
-        incoming_user = df.schema
-        evolved = merge_schemas(current, incoming_user)
+        evolved = merge_schemas(self._schema(self.log.snapshot()), df.schema)
         aligned = align_to_schema(df, evolved).withColumn(BUCKET_COL, self.bucket_expr())
         adds = self._write_data(aligned, self.num_buckets)
         return self._commit(adds, [], evolved, manifest)

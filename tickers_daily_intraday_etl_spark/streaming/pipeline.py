@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
 from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA
+from tickers_daily_intraday_etl_spark.lake.maintenance import buckets_over
 from tickers_daily_intraday_etl_spark.lake.table import LakeTable
 
 
@@ -150,50 +151,38 @@ class CdcPipeline:
             },
         )
         self.lineage.append(manifest)
-        if not manifest.get("skipped"):
-            self._batches_applied += 1
-            if self.compact_every and self._batches_applied % self.compact_every == 0:
-                from tickers_daily_intraday_etl_spark.lake.maintenance import compact
+        if manifest.get("skipped"):
+            return
+        self._batches_applied += 1
+        # imported at call time so a wrapper installed on the module
+        # (tracing) sees every maintenance call
+        from tickers_daily_intraday_etl_spark.lake.maintenance import compact, vacuum
 
-                self.lineage.append({"maintenance": compact(self.table)})
-            elif self.compact_delta_files_threshold is not None and self._delta_pressure():
-                from tickers_daily_intraday_etl_spark.lake.maintenance import compact
-
-                self.lineage.append(
-                    {
-                        "maintenance": compact(
-                            self.table,
-                            max_files_per_bucket=None,
-                            max_delta_files_per_bucket=self.compact_delta_files_threshold,
-                        )
-                    }
-                )
-            if self.maintain_every and self._batches_applied % self.maintain_every == 0:
-                from tickers_daily_intraday_etl_spark.lake.maintenance import vacuum
-
-                self.lineage.append(
-                    {
-                        "maintenance": vacuum(
-                            self.table,
-                            retain_last_n_versions=self.vacuum_retain_versions,
-                            min_age_seconds=0.0,
-                            expire_log_checkpoints=self.expire_log_checkpoints,
-                        )
-                    }
-                )
-
-    def _delta_pressure(self) -> bool:
-        """True if any bucket's live delta-file count exceeds the
-        threshold (commit-log metadata only, no data scan)."""
-        snap = self.table.log.snapshot()
-        counts: dict[int, int] = {}
-        for a in snap.live_files.values():
-            if a.get("kind") == "delta":
-                b = a["bucket"]
-                counts[b] = counts.get(b, 0) + 1
-                if counts[b] > self.compact_delta_files_threshold:
-                    return True
-        return False
+        if self.compact_every and self._batches_applied % self.compact_every == 0:
+            self.lineage.append({"maintenance": compact(self.table)})
+        elif self.compact_delta_files_threshold is not None and buckets_over(
+            self.table.log.snapshot(), max_delta_files_per_bucket=self.compact_delta_files_threshold
+        ):
+            self.lineage.append(
+                {
+                    "maintenance": compact(
+                        self.table,
+                        max_files_per_bucket=None,
+                        max_delta_files_per_bucket=self.compact_delta_files_threshold,
+                    )
+                }
+            )
+        if self.maintain_every and self._batches_applied % self.maintain_every == 0:
+            self.lineage.append(
+                {
+                    "maintenance": vacuum(
+                        self.table,
+                        retain_last_n_versions=self.vacuum_retain_versions,
+                        min_age_seconds=0.0,
+                        expire_log_checkpoints=self.expire_log_checkpoints,
+                    )
+                }
+            )
 
     def run_available_now(self) -> list[dict[str, Any]]:
         """Drain everything currently in the feed dir, then stop.
