@@ -4,6 +4,7 @@ generation of internal caches, and release_caches() drops them all."""
 
 from pyspark.sql import Row
 
+from tickers_daily_intraday_etl_spark.functions import dedupe
 from tickers_daily_intraday_etl_spark.functions._cache import release_caches
 from tickers_daily_intraday_etl_spark.functions.dedupe import (
     connected_components,
@@ -58,7 +59,8 @@ def test_repeated_simhash_invocations_do_not_accumulate_caches(spark):
     release_caches()
 
 
-def test_connected_components_releases_round_persists(spark):
+def test_connected_components_releases_round_persists(spark, monkeypatch):
+    monkeypatch.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 0)  # star rounds persist
     release_caches()
     spark.catalog.clearCache()
     base = _n_cached(spark)

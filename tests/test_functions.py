@@ -285,11 +285,12 @@ def test_connected_components_multi_hop(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 9: 9}
 
 
-def test_connected_components_chain_converges_in_log_rounds(spark):
+def test_connected_components_chain_converges_in_log_rounds(spark, monkeypatch):
     """A 64-node near-dup chain (the template-page shape common in web
     corpora) is the worst case for plain label propagation (~63 rounds,
-    one per hop).  Large-star/small-star must still produce the exact
-    fixpoint AND converge in O(log n) rounds."""
+    one per hop).  Large-star/small-star (forced: driver cap 0) must
+    still produce the exact fixpoint AND converge in O(log n) rounds."""
+    monkeypatch.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 0)
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
@@ -303,15 +304,102 @@ def test_connected_components_chain_converges_in_log_rounds(spark):
     assert stats["rounds"] <= 12, stats
 
 
-def test_connected_components_raises_without_convergence(spark):
-    """Exhausting max_iters must raise, not silently return non-fixpoint
-    labels that diverge from the recursive-CTE oracle."""
+def test_connected_components_raises_without_convergence(spark, monkeypatch):
+    """Exhausting max_iters of the distributed rounds (forced: driver cap
+    0) must raise, not silently return non-fixpoint labels that diverge
+    from the recursive-CTE oracle."""
+    monkeypatch.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 0)
     nodes = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(15)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedupe.connected_components(nodes, pairs, "doc_id", max_iters=1)
+
+
+def test_connected_components_small_graph_labels_on_driver(spark):
+    """A graph under the driver cap is labelled by the driver union-find:
+    no star round runs, and the labels are the component minima."""
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(5, 3), (3, 7), (1, 2), (2, 2), (7, 5)], "id_a long, id_b long"
+    )
+    stats: dict = {}
+    out = {r.doc_id: r.cluster_id for r in
+           dedupe.connected_components(nodes, pairs, "doc_id", stats=stats).collect()}
+    assert stats["rounds"] == 0
+    assert out == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3}
+
+
+def _cc_property_graph(rng, n):
+    """Disjoint chains, stars, isolated nodes, self-loops, repeated and
+    reversed edges over a shuffled id space (so component minima sit
+    anywhere in a chain or star)."""
+    ids = list(range(n))
+    rng.shuffle(ids)
+    it = iter(ids)
+    edges = []
+    for length in (2, 3, 9, 17):  # chains
+        c = [next(it) for _ in range(length)]
+        edges += list(zip(c, c[1:]))
+    for leaves in (1, 4, 12):  # stars
+        hub = next(it)
+        edges += [(hub, next(it)) for _ in range(leaves)]
+    loops = [next(it) for _ in range(3)]  # self-loops only: still isolated
+    edges += [(x, x) for x in loops] + [(edges[0][0], edges[0][0])]
+    edges += edges[:5] + [(b, a) for a, b in edges[3:9]]  # repeats, reversals
+    rng.shuffle(edges)
+    return edges  # the remaining ids stay isolated
+
+
+def test_connected_components_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """Seeded property test: the driver union-find and the distributed
+    star rounds (forced: driver cap 0) return identical rows and schema,
+    for integer and string ids."""
+    import random
+
+    def both(nodes, pairs):
+        stats: dict = {}
+        driver = dedupe.connected_components(nodes, pairs, "doc_id", stats=stats)
+        assert stats["rounds"] == 0
+        d_rows, d_schema = sorted(driver.collect()), driver.schema
+        with monkeypatch.context() as m:
+            m.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 0)
+            dist = dedupe.connected_components(nodes, pairs, "doc_id", stats=stats)
+            assert stats["rounds"] > 0
+            assert sorted(dist.collect()) == d_rows
+            assert dist.schema == d_schema
+        return dict(d_rows)
+
+    for seed in (11, 12):
+        rng = random.Random(seed)
+        n = 70
+        edges = _cc_property_graph(rng, n)
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        out = both(nodes, pairs)
+        # independent check: component minima by repeated relaxation
+        label = {i: i for i in range(n)}
+        changed = True
+        while changed:
+            changed = False
+            for a, b in edges:
+                low = min(label[a], label[b])
+                if label[a] != low or label[b] != low:
+                    label[a] = label[b] = low
+                    changed = True
+        assert out == label
+
+    # string ids: ordering is code-point order on both paths
+    snodes = spark.createDataFrame([(x,) for x in ["b", "a9", "a10", "Z", "é", "c", "lone"]],
+                                   "doc_id string")
+    spairs = spark.createDataFrame(
+        [("b", "a9"), ("a10", "b"), ("é", "Z"), ("c", "c"), ("Z", "é")],
+        "id_a string, id_b string",
+    )
+    assert both(snodes, spairs) == {
+        "b": "a10", "a9": "a10", "a10": "a10", "Z": "Z", "é": "Z", "c": "c", "lone": "lone",
+    }
 
 
 def test_ann_multitable_recall_superset_of_single_table(spark):
@@ -396,6 +484,33 @@ def test_planes_for_corpus_occupancy_bound(spark):
     assert occ[1] == 256 and occ[0] <= 16  # spread, no structural pile-up
 
 
+def test_seq_dot_is_a_plain_left_to_right_fold(monkeypatch):
+    """Python >= 3.12 makes sum() of floats compensated (simulated here
+    with math.fsum): the oracle-parity dot product must not depend on it."""
+    import builtins
+    import math
+
+    monkeypatch.setattr(builtins, "sum", math.fsum)
+    # plain fold: (1e16 + 1.0) rounds to 1e16, then - 1e16 -> 0.0
+    assert similarity._seq_dot([1e16, 1.0, -1e16], [1, 1, 1]) == 0.0
+
+
+def test_hyperplane_bucket_is_long_past_31_planes(spark):
+    """40 planes all on the vector's positive side set bits 0..39: the
+    bucket is a long, not an int32 that overflows at bit 31."""
+    df = spark.createDataFrame([([1.0, 2.0, 3.0, 4.0],)], "v array<double>")
+    out = df.select(similarity.hyperplane_lsh_bucket(F.col("v"), [[1.0] * 4] * 40).alias("b"))
+    assert out.first().b == (1 << 40) - 1
+    assert dict(out.dtypes)["b"] == "bigint"
+
+
+def test_hyperplane_bucket_kernels_are_bounded(spark):
+    """A long-lived process varying plane sets keeps at most 32 kernels."""
+    for i in range(100):
+        similarity.hyperplane_lsh_bucket(F.col("v"), [[float(i), 1.0]])
+    assert similarity._bucket_kernel.cache_info().currsize <= 32
+
+
 def test_text_functions_null_safe(spark):
     import duckdb
 
@@ -461,13 +576,15 @@ def test_fan_out_small_window_bounds(spark):
     assert not has_roundrobin(fan_out_small(big))
 
 
-def test_connected_components_restores_shuffle_partitions(spark):
-    """The CC loop's edge-count-sized shuffle-width override (round 6)
-    must restore the session setting afterwards — including when the
-    loop raises (non-convergence)."""
+def test_connected_components_restores_shuffle_partitions(spark, monkeypatch):
+    """The distributed CC rounds (forced: driver cap 0) must leave the
+    session's shuffle width as it was — after a success and after a
+    raise (non-convergence)."""
     from pyspark.sql import functions as F
 
     from tickers_daily_intraday_etl_spark.functions.dedupe import connected_components
+
+    monkeypatch.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 0)
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)

@@ -223,6 +223,12 @@ def ngram_jaccard_pairs(
 
 
 # --------------------------------------------------- connected components
+# Graphs with at most this many distinct edges are labelled on the
+# driver.  At the cap (one random 10^6-edge graph, local[2]) the Python
+# driver peaked 445 MB above its starting RSS and the call took 11 s.
+_DRIVER_CC_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -230,9 +236,8 @@ def connected_components(
     max_iters: int = 30,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Duplicate-CLUSTER assignment via alternating large-star/small-star
-    rounds (public algorithm: Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014).
+    """Duplicate-CLUSTER assignment: the connected components of the
+    candidate-pair graph.
 
     ``nodes``: one row per document id; ``pairs``: undirected candidate
     edges (id_a, id_b) from any near-dup family.  Returns (id, cluster_id)
@@ -240,39 +245,40 @@ def connected_components(
     exact transitive fixpoint (matches a recursive-CTE oracle), the
     canonical representative every dedup "apply" stage keys on.
 
-    Each round rewires the edge set toward stars rooted at component
-    minima:
+    The distinct canonical edge set is checkpointed, then ONE capped
+    action collects at most ``_DRIVER_CC_MAX_EDGES + 1`` edges.
 
-    * large-star: from each node u with m = min(Γ(u) ∪ {u}), every
-      LARGER neighbor v re-attaches to m — edges (v, m);
-    * small-star: edges oriented (larger, smaller); from each node a,
-      its smaller neighbors AND a itself attach to m = min(Γ⁻(a) ∪ {a}).
-
-    Both are one groupBy-min + one equi-join on the node id.  Unlike
-    plain min-label propagation (O(component-diameter) rounds — a
-    template-page chain A~B~…~Z in a web corpus forces rounds ∝ chain
-    length), this converges in O(log n) rounds regardless of diameter,
-    because stars collapse by pointer-doubling.  At the fixpoint the edge
-    set IS the answer: (member, component-min) pairs.
+    * At most ``_DRIVER_CC_MAX_EDGES`` edges (every near-dup graph the
+      queries build — a few hundred edges at sf0.1): min-root union-find
+      with path halving on the driver (the smaller root always becomes
+      the parent, so every root is its component's minimum).  Python
+      int/str comparisons order ids exactly as Spark does, so the driver
+      path only takes integral or plain-string ids.  Driver memory is
+      bounded by the cap (~450 B of Python heap per collected edge at
+      peak).  No Spark job runs after the collect; ``stats["rounds"]``
+      is 0.
+    * Above the cap (or for other id types): alternating
+      large-star/small-star rounds at session width (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC 2014).  Each
+      round rewires the edge set toward stars rooted at component
+      minima — large-star: from each node u with m = min(Γ(u) ∪ {u}),
+      every LARGER neighbor v re-attaches to m; small-star: edges
+      oriented (larger, smaller), from each node a its smaller neighbors
+      AND a itself attach to m = min(Γ⁻(a) ∪ {a}).  Unlike plain
+      min-label propagation (rounds ∝ component diameter), this
+      converges in O(log n) rounds because stars collapse by
+      pointer-doubling; at the fixpoint the edge set IS the answer:
+      (member, component-min) pairs.  Lineage is truncated with
+      ``localCheckpoint`` every other round (odd rounds persist in
+      memory): the round-N plan references round N-1's several times,
+      so unbounded lineage kills Catalyst analysis long before the data
+      hurts.  (On a real cluster prefer ``checkpoint()`` to reliable
+      storage for fault tolerance; the truncation role is identical.)
 
     Raises RuntimeError if ``max_iters`` rounds pass without reaching the
     fixpoint — returning partial labels would silently diverge from the
     documented exact-fixpoint contract.  ``stats`` (optional dict) gets
     ``{"rounds": n}`` recorded for convergence tests.
-
-    Constant-factor shape (round-4 tuning): the large-star output is NOT
-    distinct-ed — its only consumers are the small-star groupBy (which
-    dedups contributions by construction) and the small-star join whose
-    result feeds the final distinct, so the extra shuffle bought nothing.
-    Lineage is truncated with ``localCheckpoint`` every OTHER round
-    (odd rounds persist in memory instead): the round-N plan references
-    round N-1's several times and grows ~4x per round, so unbounded
-    lineage kills Catalyst analysis long before the data hurts — but a
-    per-round checkpoint pays a full storage write per round, and a
-    2-round truncation cadence bounds plan depth at the same asymptote
-    for half the writes.  (On a real cluster prefer ``checkpoint()`` to
-    reliable storage for fault tolerance; the truncation role is
-    identical.)
 
     Re-entry invalidates the PREVIOUS return value: entry releases the
     prior invocation's tracked persists INCLUDING its localCheckpoint
@@ -298,36 +304,87 @@ def connected_components(
         .distinct()
     )
     E = checkpoint_tracked("connected_components", E)
+    id_type = E.schema["u"].dataType
+    edges = E.limit(_DRIVER_CC_MAX_EDGES + 1).collect()
     rounds = 0
-    n_edges = E.count()  # one job: convergence base case AND loop sizing
-    converged = n_edges == 0
-    # Size the loop's shuffle width from the edge count: every round is
-    # ~6 shuffled stages over the (persisted) edge set, and persisted
-    # relations pin their partitioning — AQE's runtime coalescing never
-    # applies to them — so a small graph pays full session-width task
-    # scheduling per stage per round (measured 10.2s for 3 rounds over
-    # 16k edges at 32 partitions; 3.5s at the sized width).  Clamped at
-    # the session setting, so a 10^9-edge graph keeps full parallelism.
-    spark = E.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    loop_parts = max(1, min(int(old_parts), -(-n_edges // 200_000)))
-    spark.conf.set(conf_key, str(loop_parts))
-    try:
-        converged, E, rounds = _cc_loop(E, rounds, converged, max_iters)
-    finally:
-        spark.conf.set(conf_key, old_parts)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            "large-star/small-star rounds — partial labels would break the "
-            "exact-fixpoint contract; raise max_iters"
+    if len(edges) <= _DRIVER_CC_MAX_EDGES and (
+        isinstance(id_type, T.IntegralType) or id_type == T.StringType()
+    ):
+        roots = E.sparkSession.createDataFrame(
+            _min_root_labels(edges),
+            T.StructType([T.StructField("u", id_type), T.StructField("__root", id_type)]),
         )
+    else:
+        converged = not edges
+        for _ in range(max_iters):
+            if converged:
+                break
+            rounds += 1
+            # ---- large-star ----
+            # One explicit repartition on the star root serves BOTH the
+            # groupBy-min (clustering satisfied, aggregate exchange elided)
+            # and the min-attach join (both sides inherit the same
+            # HashPartitioning, so the join plans no exchange of its own):
+            # the edge set crosses the wire once per star instead of twice.
+            sym = E.unionByName(
+                E.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            ).repartition(F.col("u"))
+            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            # no distinct here: the small-star groupBy dedups its min
+            # contributions anyway, and the duplicate (b, m) join rows fold
+            # into the round's closing aggregation
+            large = (
+                sym.where(F.col("v") > F.col("u"))
+                .join(mins, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .where(F.col("u") != F.col("v"))
+            )
+            # ---- small-star (edges of `large` are already child>parent) ----
+            oriented = large.select(
+                F.greatest(F.col("u"), F.col("v")).alias("a"),
+                F.least(F.col("u"), F.col("v")).alias("b"),
+            ).repartition(F.col("a"))
+            mins2 = oriented.groupBy("a").agg(F.min("b").alias("m"))
+            S_raw = (
+                oriented.join(mins2, "a")
+                .select(F.col("b").alias("u"), F.col("m").alias("v"))
+                .unionByName(mins2.select(F.col("a").alias("u"), F.col("m").alias("v")))
+                .where(F.col("u") != F.col("v"))
+            )
+            # ONE shuffle closes the round: tag rows by origin and group by
+            # edge — max(__s)/max(__e) give set membership, so the same
+            # aggregation IS the small-star distinct AND the S-vs-E set
+            # equality check (converged iff no edge is in exactly one set).
+            grouped = (
+                S_raw.select("u", "v", F.lit(1).alias("__s"), F.lit(0).alias("__e"))
+                .unionByName(E.select("u", "v", F.lit(0).alias("__s"), F.lit(1).alias("__e")))
+                .groupBy("u", "v")
+                .agg(F.max("__s").alias("__in_s"), F.max("__e").alias("__in_e"))
+            )
+            # ONE action closes the round: counting the membership
+            # mismatches populates the persisted round relation as a side
+            # effect (the cache fills on first scan).  Even rounds truncate
+            # lineage with a checkpoint (one extra job); odd rounds persist.
+            if rounds % 2 == 0:
+                grouped = checkpoint_tracked("connected_components", grouped)
+            else:
+                grouped = persist_tracked("connected_components", grouped)
+            # full count, not isEmpty/limit: the unrestricted scan is what
+            # guarantees every partition of the round relation lands in the
+            # cache in this same job
+            converged = grouped.where(F.col("__in_s") != F.col("__in_e")).count() == 0
+            E = grouped.where(F.col("__in_s") == 1).select("u", "v")
+        if not converged:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                "large-star/small-star rounds — partial labels would break the "
+                "exact-fixpoint contract; raise max_iters"
+            )
+        # fixpoint edge set = (member, component-min); one row per member at
+        # a star, but groupBy-min guards the degenerate shapes too
+        roots = E.groupBy("u").agg(F.min("v").alias("__root"))
     if stats is not None:
         stats["rounds"] = rounds
-    # fixpoint edge set = (member, component-min); one row per member at a
-    # star, but groupBy-min guards the (count==0) degenerate shapes too
-    roots = E.groupBy("u").agg(F.min("v").alias("__root"))
     out = (
         nodes.select(F.col(id_col).alias("id"))
         .join(roots, F.col("id") == F.col("u"), "left")
@@ -339,83 +396,26 @@ def connected_components(
     return out
 
 
-def _cc_loop(E: DataFrame, rounds: int, converged: bool, max_iters: int):
-    """The alternating-star rounds of ``connected_components`` (split out
-    so the shuffle-width override wraps exactly the loop's actions)."""
-    from tickers_daily_intraday_etl_spark.functions._cache import (
-        checkpoint_tracked,
-        persist_tracked,
-    )
+def _min_root_labels(edges) -> list[tuple]:
+    """(member, component-min) for every non-minimum endpoint of
+    ``edges``: union-find where the smaller root always becomes the
+    parent, with path halving."""
+    parent: dict = {}
 
-    for _ in range(max_iters):
-        if converged:
-            break
-        rounds += 1
-        # ---- large-star ----
-        # One explicit repartition on the star root serves BOTH the
-        # groupBy-min (clustering satisfied, aggregate exchange elided —
-        # the same Catalyst property the merge path's clustered LWW
-        # exploits) and the min-attach join (both sides inherit the same
-        # HashPartitioning, so the join plans no exchange of its own):
-        # the edge set crosses the wire once per star instead of twice —
-        # 5 exchanges/round -> 3 (guide §2.4 "share one exchange").
-        sym = E.unionByName(E.select(F.col("v").alias("u"), F.col("u").alias("v"))).repartition(
-            F.col("u")
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # no distinct here: the small-star groupBy dedups its min
-        # contributions anyway, and the duplicate (b, m) join rows fold
-        # into S's final distinct — one whole edge-set shuffle saved/round
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        # ---- small-star (edges of `large` are already child>parent) ----
-        oriented = large.select(
-            F.greatest(F.col("u"), F.col("v")).alias("a"),
-            F.least(F.col("u"), F.col("v")).alias("b"),
-        ).repartition(F.col("a"))
-        mins2 = oriented.groupBy("a").agg(F.min("b").alias("m"))
-        S_raw = (
-            oriented.join(mins2, "a")
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins2.select(F.col("a").alias("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-        )
-        # ONE shuffle closes the round: tag rows by origin and group by
-        # edge — max(__s)/max(__e) give set membership, so the same
-        # aggregation IS the small-star distinct AND the S-vs-E set
-        # equality check (converged iff no edge is in exactly one set).
-        # The former separate distinct + (+1/-1)-multiset job cost one
-        # extra shuffle and one extra job per round — pure fixed
-        # overhead at small edge counts, and at 10^9 edges one full
-        # extra pass over the edge set.
-        grouped = (
-            S_raw.select("u", "v", F.lit(1).alias("__s"), F.lit(0).alias("__e"))
-            .unionByName(E.select("u", "v", F.lit(0).alias("__s"), F.lit(1).alias("__e")))
-            .groupBy("u", "v")
-            .agg(F.max("__s").alias("__in_s"), F.max("__e").alias("__in_e"))
-        )
-        # ONE action closes the round: counting the membership
-        # mismatches populates the persisted round relation as a side
-        # effect (the cache fills on first scan), so no separate
-        # materialization job is needed.  Lineage is truncated with a
-        # checkpoint every other round (that round pays the extra
-        # checkpoint job); in between the in-memory persist carries it.
-        if rounds % 2 == 0:
-            grouped = checkpoint_tracked("connected_components", grouped)
-        else:
-            grouped = persist_tracked("connected_components", grouped)
-        # full count, not isEmpty/limit: the unrestricted scan is what
-        # guarantees every partition of the round relation lands in the
-        # cache in this same job
-        converged = (
-            grouped.where(F.col("__in_s") != F.col("__in_e")).count() == 0
-        )
-        E = grouped.where(F.col("__in_s") == 1).select("u", "v")
-    return converged, E, rounds
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    return [(x, r) for x in parent if (r := find(x)) != x]
 
 
 # ----------------------------------------------------------------- SimHash
