@@ -331,6 +331,29 @@ def test_connected_components_small_graph_labels_on_driver(spark):
     assert out == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3}
 
 
+def test_connected_components_collects_no_edge_off_the_driver_path(spark, monkeypatch):
+    """The path is picked from the edge count and the id type before any
+    edge reaches the driver: a graph above the cap, and a graph whose ids
+    Python does not order as Spark does (doubles), run the star rounds
+    without one collect."""
+    DataFrame = type(spark.range(1))  # the concrete class defines collect
+    collects = []
+    real_collect = DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect", lambda self: collects.append(1) or real_collect(self))
+    monkeypatch.setattr(dedupe, "_DRIVER_CC_MAX_EDGES", 2)
+    for typ, edges, want in (
+        ("long", [(1, 2), (3, 2), (4, 3)], {1: 1, 2: 1, 3: 1, 4: 1, 5: 5}),  # 3 edges > cap
+        ("double", [(2.5, 1.5)], {1.5: 1.5, 2.5: 1.5, 4.0: 4.0, 5.0: 5.0}),
+    ):
+        nodes = spark.createDataFrame([(k,) for k in want], f"doc_id {typ}")
+        pairs = spark.createDataFrame(edges, f"id_a {typ}, id_b {typ}")
+        stats: dict = {}
+        collects.clear()
+        out = dedupe.connected_components(nodes, pairs, "doc_id", stats=stats)
+        assert stats["rounds"] > 0 and not collects, (typ, stats, collects)
+        assert {r.doc_id: r.cluster_id for r in out.collect()} == want
+
+
 def _cc_property_graph(rng, n):
     """Disjoint chains, stars, isolated nodes, self-loops, repeated and
     reversed edges over a shuffled id space (so component minima sit

@@ -224,9 +224,16 @@ def ngram_jaccard_pairs(
 
 # --------------------------------------------------- connected components
 # Graphs with at most this many distinct edges are labelled on the
-# driver.  At the cap (one random 10^6-edge graph, local[2]) the Python
-# driver peaked 445 MB above its starting RSS and the call took 11 s.
+# driver.  One random graph per size (mean degree 1), local[4], call plus
+# result count, driver path vs star rounds at shuffle width 8: 10^3 edges
+# 3.0 s vs 15.5 s, 10^5 5.6 s vs 35.5 s, 10^6 17.5 s vs 89.9 s.  The
+# paths do not cross up to 10^6; at 10^6 the Python driver peaked 440 MB
+# above its starting RSS, so the cap stays at the largest size measured.
 _DRIVER_CC_MAX_EDGES = 1_000_000
+# Star-round exchanges get one partition per this many edges: a random
+# 1.2*10^6-edge graph at session width 32 took 109 s and 108 s, sized
+# (6 partitions) 95 s.
+_CC_EDGES_PER_PARTITION = 200_000
 
 
 def connected_components(
@@ -245,20 +252,21 @@ def connected_components(
     exact transitive fixpoint (matches a recursive-CTE oracle), the
     canonical representative every dedup "apply" stage keys on.
 
-    The distinct canonical edge set is checkpointed, then ONE capped
-    action collects at most ``_DRIVER_CC_MAX_EDGES + 1`` edges.
+    The distinct canonical edge set is checkpointed and counted; the
+    count and the id type pick the path before any edge reaches the
+    driver.
 
     * At most ``_DRIVER_CC_MAX_EDGES`` edges (every near-dup graph the
-      queries build — a few hundred edges at sf0.1): min-root union-find
-      with path halving on the driver (the smaller root always becomes
-      the parent, so every root is its component's minimum).  Python
-      int/str comparisons order ids exactly as Spark does, so the driver
-      path only takes integral or plain-string ids.  Driver memory is
-      bounded by the cap (~450 B of Python heap per collected edge at
-      peak).  No Spark job runs after the collect; ``stats["rounds"]``
-      is 0.
-    * Above the cap (or for other id types): alternating
-      large-star/small-star rounds at session width (Kiveris et al.,
+      queries build — a few hundred edges at sf0.1): the edges are
+      collected and labelled by a min-root union-find with path halving
+      on the driver (the smaller root always becomes the parent, so
+      every root is its component's minimum).  Python int/str
+      comparisons order ids exactly as Spark does, so the driver path
+      only takes integral or plain-string ids.  Driver memory is bounded
+      by the cap (~450 B of Python heap per collected edge at peak).  No
+      Spark job runs after the collect; ``stats["rounds"]`` is 0.
+    * Above the cap (or for other id types): nothing is collected;
+      alternating large-star/small-star rounds (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC 2014).  Each
       round rewires the edge set toward stars rooted at component
       minima — large-star: from each node u with m = min(Γ(u) ∪ {u}),
@@ -274,6 +282,8 @@ def connected_components(
       so unbounded lineage kills Catalyst analysis long before the data
       hurts.  (On a real cluster prefer ``checkpoint()`` to reliable
       storage for fault tolerance; the truncation role is identical.)
+      The two star exchanges take one partition per
+      ``_CC_EDGES_PER_PARTITION`` edges, not the session width.
 
     Raises RuntimeError if ``max_iters`` rounds pass without reaching the
     fixpoint — returning partial labels would silently diverge from the
@@ -305,17 +315,18 @@ def connected_components(
     )
     E = checkpoint_tracked("connected_components", E)
     id_type = E.schema["u"].dataType
-    edges = E.limit(_DRIVER_CC_MAX_EDGES + 1).collect()
+    n_edges = E.count()  # picks the path; the rounds' base case
     rounds = 0
-    if len(edges) <= _DRIVER_CC_MAX_EDGES and (
+    if n_edges <= _DRIVER_CC_MAX_EDGES and (
         isinstance(id_type, T.IntegralType) or id_type == T.StringType()
     ):
         roots = E.sparkSession.createDataFrame(
-            _min_root_labels(edges),
+            _min_root_labels(E.collect()),
             T.StructType([T.StructField("u", id_type), T.StructField("__root", id_type)]),
         )
     else:
-        converged = not edges
+        converged = n_edges == 0
+        parts = -(-n_edges // _CC_EDGES_PER_PARTITION)
         for _ in range(max_iters):
             if converged:
                 break
@@ -328,7 +339,7 @@ def connected_components(
             # the edge set crosses the wire once per star instead of twice.
             sym = E.unionByName(
                 E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).repartition(F.col("u"))
+            ).repartition(parts, F.col("u"))
             mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
             # no distinct here: the small-star groupBy dedups its min
             # contributions anyway, and the duplicate (b, m) join rows fold
@@ -343,7 +354,7 @@ def connected_components(
             oriented = large.select(
                 F.greatest(F.col("u"), F.col("v")).alias("a"),
                 F.least(F.col("u"), F.col("v")).alias("b"),
-            ).repartition(F.col("a"))
+            ).repartition(parts, F.col("a"))
             mins2 = oriented.groupBy("a").agg(F.min("b").alias("m"))
             S_raw = (
                 oriented.join(mins2, "a")
