@@ -226,9 +226,10 @@ def ngram_jaccard_pairs(
 # Graphs with at most this many distinct edges are labelled on the
 # driver.  One random graph per size (mean degree 1), local[4], call plus
 # result count, driver path vs star rounds at shuffle width 8: 10^3 edges
-# 3.0 s vs 15.5 s, 10^5 5.6 s vs 35.5 s, 10^6 17.5 s vs 89.9 s.  The
-# paths do not cross up to 10^6; at 10^6 the Python driver peaked 440 MB
-# above its starting RSS, so the cap stays at the largest size measured.
+# 3.0 s vs 15.5 s, 10^5 5.6 s vs 35.5 s, 10^6 17.5 s vs 89.9 s (80.2 s
+# with the sized star exchanges below).  The paths do not cross up to
+# 10^6; at 10^6 the Python driver peaked 440 MB above its starting RSS,
+# so the cap stays at the largest size measured.
 _DRIVER_CC_MAX_EDGES = 1_000_000
 # Star-round exchanges get one partition per this many edges: a random
 # 1.2*10^6-edge graph at session width 32 took 109 s and 108 s, sized
