@@ -4,7 +4,7 @@
       --py-files $(python -c 'from tickers_daily_intraday_etl_spark.session import build_pyfiles_zip; print(build_pyfiles_zip())') \
       run_pipeline.py --feed <dir> --table <dir> --checkpoint <dir> \
       [--num-buckets 128] [--salt 16] [--feed-format parquet] \
-      [--compact-every N] [--compact-delta-threshold K] \
+      [--compact-delta-threshold K] \
       [--merge-mode cow|mor] [--evolved-schema] [--maintain-every N] \
       [--vacuum-retain-versions V [--expire-log-checkpoints C]]
 
@@ -36,15 +36,15 @@ def main() -> None:
                          "that only pays off on heavily-duplicated hot-key "
                          "feeds (see cdc/dedup.py lww_winner)")
     ap.add_argument("--feed-format", default="parquet")
-    ap.add_argument("--compact-every", type=int, default=None)
     ap.add_argument("--compact-delta-threshold", type=int, default=None,
-                    help="size-based trigger: fold any bucket whose live "
-                         "merge-on-read delta-file count exceeds K "
-                         "(hot buckets only; cold buckets untouched)")
+                    help="size-based trigger: a bucket already holding K "
+                         "merge-on-read delta files is folded into one base "
+                         "file by the next merge (hot buckets only; cold "
+                         "buckets keep their deltas)")
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow",
                     help="cow rewrites affected buckets; mor writes per-bucket "
-                         "delta files (pair with --compact-every to fold them)")
+                         "delta files (pair with --compact-delta-threshold to fold them)")
     ap.add_argument("--evolved-schema", action="store_true",
                     help="read the feed with the schema-evolution envelope (source_version)")
     ap.add_argument("--maintain-every", type=int, default=None,
@@ -88,7 +88,6 @@ def main() -> None:
         num_buckets=args.num_buckets,
         salt_partitions=args.salt,
         feed_format=args.feed_format,
-        compact_every=args.compact_every,
         compact_delta_files_threshold=args.compact_delta_threshold,
         max_files_per_trigger=args.max_files_per_trigger,
         merge_mode=args.merge_mode,

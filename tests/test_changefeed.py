@@ -1,5 +1,5 @@
 """Multi-format change-feed sources (parquet/json/csv) through the full
-streaming pipeline, plus auto-compaction."""
+streaming pipeline, plus the file count of a copy-on-write stream."""
 
 import datetime as dt
 import os
@@ -57,17 +57,18 @@ def test_feed_roundtrip_through_pipeline(spark, tmpdir_path, fmt):
 
 
 def test_pipeline_auto_compaction(spark, tmpdir_path):
+    """A copy-on-write stream needs no compaction option: every merge
+    rewrites its touched buckets into one file each, so after four
+    one-segment batches each bucket still holds exactly one live file."""
     feed_dir = os.path.join(tmpdir_path, "feed")
     for seg in range(4):
         write_feed(_events(spark).coalesce(1), feed_dir, fmt="parquet")
     pipe = CdcPipeline(
         spark, feed_dir, os.path.join(tmpdir_path, "t"), os.path.join(tmpdir_path, "c"),
-        num_buckets=4, max_files_per_trigger=1, compact_every=2,
+        num_buckets=4, max_files_per_trigger=1,
     )
     lineage = pipe.run_available_now()
-    maint = [m for m in lineage if "maintenance" in m]
-    assert len(maint) == 2  # compacted after batches 2 and 4
-    # table stays correct and tight after compaction
+    assert not [m for m in lineage if "maintenance" in m]
     assert pipe.table.read().count() == 10
     per_bucket: dict[int, int] = {}
     for a in pipe.table.log.snapshot().live_files.values():

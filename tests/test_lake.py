@@ -270,24 +270,30 @@ def test_zone_map_stats_survive_checkpoint_fold(spark, tmpdir_path, monkeypatch)
     assert sorted(r.n_tok for r in out.collect()) == list(range(21, 26))
 
 
+def _lake_ev(i, op, lsn):
+    import datetime as dt
+
+    return Row(op=op, doc_id=f"k{i:02d}", lsn=lsn,
+               commit_ts=dt.datetime(2024, 1, 1) + dt.timedelta(seconds=lsn),
+               tokens=[i, lsn], n_tok=2, source="s")
+
+
+def _cow_mor_batches():
+    cow = [_lake_ev(i, "I", 1 + i) for i in range(40)]
+    mor = [_lake_ev(i, "D" if i % 10 == 0 else "U", 100 + i) for i in range(0, 40, 2)]
+    return cow, mor
+
+
 def _cow_then_mor_with_deletes(spark, path):
     """4-bucket table: one CoW batch inserting k00..k39, then one MoR
     batch over every other key, a fifth of it deletes (k00, k10, k20,
     k30).  Every bucket ends up holding a base file and a delta file."""
-    import datetime as dt
-
     from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
     from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA, TARGET_SCHEMA
 
     t = LakeTable.create_if_not_exists(spark, path, TARGET_SCHEMA, num_buckets=4)
-
-    def ev(i, op, lsn):
-        return Row(op=op, doc_id=f"k{i:02d}", lsn=lsn,
-                   commit_ts=dt.datetime(2024, 1, 1) + dt.timedelta(seconds=lsn),
-                   tokens=[i, lsn], n_tok=2, source="s")
-
-    merge_into(t, spark.createDataFrame([ev(i, "I", 1 + i) for i in range(40)], CDC_SCHEMA), batch_id=0)
-    mor = [ev(i, "D" if i % 10 == 0 else "U", 100 + i) for i in range(0, 40, 2)]
+    cow, mor = _cow_mor_batches()
+    merge_into(t, spark.createDataFrame(cow, CDC_SCHEMA), batch_id=0)
     merge_into(t, spark.createDataFrame(mor, CDC_SCHEMA), batch_id=1, mode="mor")
     assert t.has_deltas()
     return t
@@ -343,3 +349,39 @@ def test_reads_see_one_version_under_concurrent_compaction(spark, tmpdir_path):
     fired = _compact_after_first_snapshot(spark, t)
     assert t.lookup("k10").collect() == []
     assert fired and fired[0]["compacted_buckets"] == 4
+
+
+def test_compact_keeps_a_delta_committed_while_it_runs(spark, tmpdir_path):
+    """Out-of-band compaction only checks that the files it replaces are
+    still live.  A MoR batch another writer commits into a bucket being
+    compacted, after compact resolved its snapshot, neither aborts the
+    compaction nor gets lost: its delta stays live and resolves against
+    the new base file."""
+    import pandas as pd
+
+    from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
+    from tickers_daily_intraday_etl_spark.cdc.oracle import replay
+    from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA
+    from tickers_daily_intraday_etl_spark.lake.maintenance import compact
+
+    t = _cow_then_mor_with_deletes(spark, os.path.join(tmpdir_path, "late"))
+    late = [_lake_ev(1, "U", 500), _lake_ev(10, "I", 501)]  # k10 was deleted
+    orig, landed = t.log.snapshot, []
+
+    def hooked(version=None):
+        snap = orig(version)
+        t.log.snapshot = orig
+        other = LakeTable.load(spark, t.path)
+        landed.append(merge_into(other, spark.createDataFrame(late, CDC_SCHEMA), batch_id=2, mode="mor"))
+        return snap
+
+    t.log.snapshot = hooked
+    res = compact(t)
+    assert res["compacted_buckets"] == 4 and res["version"] == landed[0]["version"] + 1
+    live = t.log.snapshot().live_files
+    late_paths = [a["path"] for a in t.log.read_entry(landed[0]["version"]).adds]
+    assert late_paths and all(live[p]["kind"] == "delta" for p in late_paths)
+    cow, mor = _cow_mor_batches()
+    want = replay(pd.DataFrame([r.asDict() for r in cow + mor + late]))
+    got = {r.doc_id: list(r.tokens) for r in t.read().collect()}
+    assert got == {k: list(v["tokens"]) for k, v in want.items()}

@@ -213,13 +213,32 @@ def test_size_based_compaction_folds_hot_bucket_only(spark, tmpdir_path):
     assert after[cold_b] == 1          # cold bucket untouched
     assert _tokens_map(table.read()) == {hot_key: [5], cold_key: [1]}
 
+    # the same fold inside a merge: a MoR batch touching only the cold
+    # key rewrites the hot bucket (1 base + 2 deltas), not the cold one
+    for lsn in (6, 7):
+        merge_into(table, spark.createDataFrame([ev(hot_key, lsn)], CDC_SCHEMA),
+                   batch_id=bid + lsn, mode="mor")
+    hot_files = [a for a in table.log.snapshot().live_files.values() if a["bucket"] == hot_b]
+    m = merge_into(table, spark.createDataFrame([ev(cold_key, 2)], CDC_SCHEMA),
+                   batch_id="cold", mode="mor", max_delta_files_per_bucket=2)
+    assert m["files_removed"] == len(hot_files) == 3
+    after = delta_counts()
+    assert hot_b not in after and after[cold_b] == 2
+    assert _tokens_map(table.read()) == {hot_key: [7], cold_key: [2]}
 
-def test_pipeline_delta_threshold_triggers_compaction(spark, tmpdir_path):
+
+def test_pipeline_delta_threshold_triggers_compaction(spark, tmpdir_path, monkeypatch):
     """End-to-end: a MoR pipeline with compact_delta_files_threshold folds
-    delta pressure during the run (no count-based cadence set)."""
+    delta pressure inside its merges (no separate compaction job), and
+    no bucket ever holds more deltas than the threshold."""
     from tickers_daily_intraday_etl_spark.cdc.feedgen import write_feed_segments
+    from tickers_daily_intraday_etl_spark.lake import maintenance
     from tickers_daily_intraday_etl_spark.streaming import CdcPipeline
 
+    def no_compact(*a, **k):
+        raise AssertionError("the pipeline must fold deltas inside its merges")
+
+    monkeypatch.setattr(maintenance, "compact", no_compact)
     events = generate_feed(n_events=600, n_docs=10, seed=3, p_delete=0.0)  # hot keys
     feed_dir = os.path.join(tmpdir_path, "feed")
     write_feed_segments(events, feed_dir, n_segments=8)
@@ -229,10 +248,10 @@ def test_pipeline_delta_threshold_triggers_compaction(spark, tmpdir_path):
         merge_mode="mor", compact_delta_files_threshold=2,
     )
     pipe.run_available_now()
-    assert any("maintenance" in m for m in pipe.lineage)  # trigger fired
+    assert any(m.get("files_removed", 0) > 0 for m in pipe.lineage)  # the fold fired
     counts = {}
     for a in pipe.table.log.snapshot().live_files.values():
         if a.get("kind") == "delta":
             counts[a["bucket"]] = counts.get(a["bucket"], 0) + 1
-    assert all(v <= 3 for v in counts.values()), counts  # pressure bounded
+    assert all(v <= 2 for v in counts.values()), counts  # pressure bounded
     assert _tokens_map(pipe.table.read()) == _oracle_map(events)

@@ -127,4 +127,4 @@ def test_spark_submit_merge_mode_mor(spark, tmpdir_path):
     for a in snap.live_files.values():
         if a.get("kind") == "delta":
             counts[a["bucket"]] = counts.get(a["bucket"], 0) + 1
-    assert all(v <= 3 for v in counts.values()), counts
+    assert all(v <= 2 for v in counts.values()), counts

@@ -15,31 +15,32 @@ copy-on-write MERGE with these semantics:
 * key absent in target      -> insert (op='D' inserts a tombstone so a
   later-arriving stale update still loses — replay equality demands it)
 
-Physical plan (scale-first, ONE or two jobs per batch), one code path
-for every mode:
-1. op counts — for a SPARSE copy-on-write batch, one small stats
+Physical plan (scale-first, one or two jobs per batch).  Every bucket
+rewrite in the engine is ``fold_buckets`` over a REWRITE SET: those
+buckets' live rows (base and deltas) join the batch in the LWW and
+commit as base files replacing exactly the files read; any other bucket
+the batch touches gets a delta file.  CoW = the touched buckets; MoR =
+none, plus any bucket at the delta threshold; ``compact`` = the buckets
+over its thresholds, no batch; ``purge_tombstones`` = that plus a filter.
+1. op counts — a SPARSE copy-on-write batch runs one small stats
    aggregation ((op x bucket) counts: rows_in, per-op counts and the
-   affected-bucket list in a single pass); for a merge-on-read batch or a
-   DENSE one (Catalyst row estimate says every bucket is touched) the
-   scan is skipped entirely and the counts ride the write as an
-   Observation;
-2. one fused LWW aggregation: (for copy-on-write) pruned-target rows
-   UNIONed with raw batch rows, winner per key = max(lsn, commit_ts,
-   fingerprint) — in-batch dedup and target-vs-batch conflict
-   resolution are the same max, so there is no separate dedup shuffle
-   and no join anywhere;
+   touched-bucket list in one pass); a merge-on-read or DENSE batch
+   (Catalyst row estimate says every bucket is touched) skips that scan
+   and the counts ride the write as an Observation;
+2. one fused LWW aggregation over batch rows UNION the rewrite set's
+   rows, winner per key = max(lsn, commit_ts, fingerprint) — in-batch
+   dedup, target-vs-batch resolution and delta folding are the same max,
+   so there is no separate dedup shuffle and no join anywhere;
 3. the aggregation is CLUSTERED ON THE STORAGE BUCKET
    (``lww_winner(cluster_col=_bucket)``): one explicit
    ``repartition(n, bucket)`` satisfies both the groupBy's clustering
    requirement AND the bucket-partitioned write's layout, so the full
-   row payload (token arrays) crosses exactly ONE shuffle per merge —
+   row payload (token arrays) crosses exactly ONE shuffle per rewrite —
    the floor for a copy-on-write rewrite (BENCH/shuffle_bytes.md and
    BENCH/roofline.md measured the cost of any second payload crossing);
-then the affected buckets are rewritten (or, merge-on-read, the deltas
-appended) and the commit (data files + batch manifest + per-bucket
-lineage) is atomic.  At 100 TB a batch touching 1% of buckets
-reads/writes 1% of the table; a bulk-load batch pays a single pass over
-its data.
+then the commit (data files + batch manifest + per-bucket lineage) is
+atomic.  At 100 TB a batch touching 1% of buckets reads/writes 1% of the
+table; a bulk-load batch pays a single pass over its data.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,7 +60,9 @@ from tickers_daily_intraday_etl_spark.lake.table import (
     DELETED_COL,
     LSN_COL,
     LakeTable,
+    Snapshot,
     align_to_schema,
+    buckets_over,
     merge_schemas,
 )
 
@@ -166,6 +169,7 @@ def merge_into(
     mode: str = "cow",
     max_conflict_retries: int = 2,
     dense: bool | None = None,
+    max_delta_files_per_bucket: int | None = None,
 ) -> dict[str, Any]:
     """Apply one change batch exactly-once. Returns the lineage manifest.
 
@@ -174,35 +178,42 @@ def merge_into(
     without touching data, which is what makes re-runs idempotent
     (the guard the reference lacks at staging/load_staging_data.py:41).
 
-    ``mode``:
-    * ``'cow'`` (copy-on-write, default): rewrite every affected bucket —
+    ``mode`` picks the rewrite set (module docstring):
+    * ``'cow'`` (copy-on-write, default): rewrite every touched bucket —
       read cost stays minimal, but a batch whose keys touch all buckets
       rewrites the whole table.
     * ``'mor'`` (merge-on-read): write ONLY the batch's deduped rows as
       per-bucket delta files (no target read, no removes — write volume
       is proportional to the BATCH); reads LWW-resolve base + deltas with
-      the identical total order, and compaction folds deltas back into
-      base files.  The right choice when batches touch a small fraction
-      of rows per bucket — the main write-amplification risk of CoW at
-      10^10-event scale.  Modes can be mixed batch-by-batch on one table.
+      the identical total order.  The right choice when batches touch a
+      small fraction of rows per bucket — the main write-amplification
+      risk of CoW at 10^10-event scale.  Modes can be mixed
+      batch-by-batch on one table.
+
+    ``max_delta_files_per_bucket`` (k >= 1, None = off): every bucket
+    already holding k live deltas joins the rewrite set and is folded
+    into one base file by this batch, so no bucket holds more than k
+    deltas after it (snapshot metadata, no job; a skewed feed folds only
+    its hot buckets).
 
     ``dense`` (CoW only): True skips the bucket-pruning stats job and
     rewrites every bucket, False always runs it; None (default) decides
     from the metadata-only row estimate (module docstring §1).
 
     ``max_conflict_retries``: a ConcurrentModificationError means another
-    writer changed an affected bucket between this merge's planning
-    snapshot and its commit; the merge is simply RE-PLANNED against the
-    new snapshot (the whole function is a pure function of table state +
-    batch, and the epoch fence re-check makes the retry replay-safe).
-    After the retries are exhausted the error propagates.
+    writer changed a bucket of the rewrite set between this merge's
+    planning snapshot and its commit; the merge is simply RE-PLANNED
+    against the new snapshot (the whole function is a pure function of
+    table state + batch, and the epoch fence re-check makes the retry
+    replay-safe).  After the retries are exhausted the error propagates.
     """
     from tickers_daily_intraday_etl_spark.lake.table import ConcurrentModificationError
 
     attempt = 0
     while True:
         try:
-            return _merge_once(table, changes, batch_id, salt_partitions, extra_manifest, mode, dense)
+            return _merge_once(table, changes, batch_id, salt_partitions, extra_manifest, mode, dense,
+                               max_delta_files_per_bucket)
         except ConcurrentModificationError:
             if attempt >= max_conflict_retries:
                 raise
@@ -217,6 +228,42 @@ def _rows_per_bucket(adds: list[dict[str, Any]]) -> dict[str, int]:
     return out
 
 
+def fold_buckets(
+    table: LakeTable, snap: Snapshot, rewrite: set[int], schema: T.StructType,
+    batch: DataFrame | None = None, est_batch_rows: int | None = 0,
+    salt_partitions: int = 0, keep: Column | None = None,
+) -> tuple[list[dict[str, Any]], list[dict[str, Any]], float]:
+    """The engine's one bucket-rewrite body: every live row of the
+    ``rewrite`` buckets at ``snap`` joins the ``batch`` rows (stored
+    layout under ``schema``; None = no batch) in one bucket-clustered
+    LWW, rows failing ``keep`` are dropped after it, and one write emits
+    the rewrite buckets as base files and any other bucket the batch
+    touches as a delta file.  Returns (new add-records, the add-records
+    they replace, seconds spent writing); the caller commits them."""
+    old_adds = [a for a in snap.live_files.values() if a["bucket"] in rewrite]
+    src = batch
+    if rewrite:
+        target = align_to_schema(table._scan(snap, sorted(rewrite)), schema)
+        # batch side on the LEFT: a union's Dataset inherits the left
+        # side's SparkSession, and inside foreachBatch the batch df lives
+        # in a CLONED session — the Observation listener registers there,
+        # so the write must execute there too or `obs.get` waits forever
+        # on a listener bus that never fires (the round-4 hang)
+        src = target if src is None else src.unionByName(target)
+    # union volume estimate, all metadata: the batch estimate plus the
+    # rewrite set's committed row counts from the snapshot
+    est_rows = None if est_batch_rows is None else est_batch_rows + sum(a["rows"] for a in old_adds)
+    merged = lww_winner(
+        src.withColumn(BUCKET_COL, table.bucket_expr()), table.key_col, LSN_COL, COMMIT_TS_COL,
+        salt_partitions=salt_partitions, cluster_col=BUCKET_COL,
+        cluster_partitions=_cluster_partitions(table, est_rows),
+    )
+    if keep is not None:
+        merged = merged.where(keep)
+    t_write = time.time()
+    return table._write_data(merged, rewrite), old_adds, time.time() - t_write
+
+
 def _merge_once(
     table: LakeTable,
     changes: DataFrame,
@@ -225,30 +272,34 @@ def _merge_once(
     extra_manifest: dict[str, Any] | None,
     mode: str,
     dense: bool | None,
+    max_delta_files_per_bucket: int | None,
 ) -> dict[str, Any]:
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode {mode!r} (expected 'cow' or 'mor')")
+    if max_delta_files_per_bucket is not None and max_delta_files_per_bucket < 1:
+        raise ValueError(f"max_delta_files_per_bucket must be >= 1, got {max_delta_files_per_bucket}")
     t0 = time.time()
     cow = mode == "cow"
 
-    # -- 1. pin the planning snapshot ONCE: the epoch fence, schema, pruned
-    #       target rows and the removes list all come from the same
-    #       version, and _commit aborts if an affected bucket gained files
-    #       after it (otherwise a concurrent add-only commit's rows would
-    #       be copied into our new files while its own files stay live ->
-    #       duplicate keys).
+    # -- 1. pin the planning snapshot ONCE: the epoch fence, schema, the
+    #       rewrite set, its rows and the removes list all come from the
+    #       same version, and _commit aborts if a rewrite bucket gained
+    #       files after it (otherwise a concurrent add-only commit's rows
+    #       would be copied into our new files while its own files stay
+    #       live -> duplicate keys).
     snap = table.log.snapshot()
     if batch_id is not None and batch_id in snap.committed_batch_ids:
         return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
     evolved = merge_schemas(table._schema(snap), T.StructType(S.payload_fields(changes.schema)))
 
-    # -- 2. learn the op counts.  A SPARSE CoW batch runs one small
+    # -- 2. the rewrite set and the op counts.  Delta pressure is
+    #       snapshot metadata.  A SPARSE CoW batch runs one small
     #       (op x bucket) stats job (<= 3 * num_buckets rows) whose bucket
     #       list bounds the rewrite to the touched fraction of the table.
-    #       MoR (no target read, nothing to prune) and DENSE CoW (the
-    #       metadata-only estimate says every bucket is touched) skip that
-    #       scan: rows_in / op counts ride the write as an Observation —
-    #       one fewer batch scan, the dominant FIXED cost per micro-batch.
+    #       MoR (nothing to prune) and DENSE CoW (the metadata-only
+    #       estimate says every bucket is touched) skip that scan:
+    #       rows_in / op counts ride the write as an Observation — one
+    #       fewer batch scan, the dominant FIXED cost per micro-batch.
     #       NB: the batch is scanned twice on the sparse path and is NOT
     #       persisted on purpose: the columnar cache for array-typed rows
     #       costs ~3x the merge itself in CPU (measured 19.7s vs 6.7s for
@@ -258,7 +309,11 @@ def _merge_once(
         dense = est is not None and est >= max(
             _DENSE_BATCH_ROWS_PER_BUCKET * table.num_buckets, _DENSE_MIN_EST_ROWS
         )
-    affected = set(range(table.num_buckets))
+    rewrite: set[int] = set()
+    if cow and dense:
+        rewrite = set(range(table.num_buckets))
+    elif max_delta_files_per_bucket is not None:
+        rewrite = buckets_over(snap, max_delta_files_per_bucket=max_delta_files_per_bucket - 1)
     op_counts: dict[str, int] = {}
     stats_s = 0.0
     obs = None
@@ -272,7 +327,7 @@ def _merge_once(
         )
         for r in stats:
             op_counts[r[S.OP_COL]] = op_counts.get(r[S.OP_COL], 0) + r["n"]
-        affected = {r[BUCKET_COL] for r in stats}
+        rewrite |= {r[BUCKET_COL] for r in stats}
         rows_in = sum(op_counts.values())
         stats_s = time.time() - t_stats
     else:
@@ -284,40 +339,20 @@ def _merge_once(
         )
         rows_in = -1  # counted while the write runs
 
-    # -- 3. one fused union/LWW winner, clustered on the storage bucket
-    #       (single payload shuffle), then one pre-partitioned write.
+    # -- 3. fold_buckets: one union/LWW winner clustered on the storage
+    #       bucket (single payload shuffle), one pre-partitioned write.
     old_adds: list[dict[str, Any]] = []
     new_adds: list[dict[str, Any]] = []
     if rows_in != 0:
-        src = _to_stored_rows(changes, evolved).withColumn(BUCKET_COL, table.bucket_expr())
-        if cow:
-            old_adds = [a for a in snap.live_files.values() if a["bucket"] in affected]
-            target = table._scan(snap, buckets=None if dense else sorted(affected))
-            target = align_to_schema(target, evolved).withColumn(BUCKET_COL, table.bucket_expr())
-            cols = [f.name for f in evolved.fields] + [BUCKET_COL]
-            # batch side on the LEFT: a union's Dataset inherits the left
-            # side's SparkSession, and inside foreachBatch the batch df
-            # lives in a CLONED session — the Observation listener
-            # registers there, so the write must execute there too or
-            # `obs.get` waits forever on a listener bus that never fires
-            # (the round-4 hang)
-            src = src.select(*cols).unionByName(target.select(*cols))
-        # union volume estimate, all metadata: exact batch rows when the
-        # stats job ran, else the Catalyst estimate, plus the pruned
-        # target's committed row counts from the snapshot
-        batch_rows = rows_in if rows_in >= 0 else est
-        est_rows = None if batch_rows is None else batch_rows + sum(a["rows"] for a in old_adds)
-        merged = lww_winner(
-            src, table.key_col, LSN_COL, COMMIT_TS_COL,
+        new_adds, old_adds, write_s = fold_buckets(
+            table, snap, rewrite, evolved,
+            batch=_to_stored_rows(changes, evolved),
+            # exact batch rows when the stats job ran, else the estimate
+            est_batch_rows=rows_in if rows_in >= 0 else est,
             salt_partitions=salt_partitions,
-            cluster_col=BUCKET_COL,
-            cluster_partitions=_cluster_partitions(table, est_rows),
-        )
-        t_plan = time.time()
-        new_adds = table._write_data(
-            merged, len(affected), kind="base" if cow else "delta", pre_partitioned=True
         )
         t_write = time.time()
+        t_plan = t_write - write_s
         if obs is not None:
             # an empty metrics row means adaptive execution proved the
             # observed input empty and pruned the observation with it
@@ -333,9 +368,10 @@ def _merge_once(
         version = table._commit([], [], evolved, {"batch_id": batch_id, "rows_in": 0})
         return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
 
-    # -- 4. atomic commit with the lineage manifest.  MoR is add-only and
-    #       conflict-free; CoW's removes are validated against the pinned
-    #       snapshot for the buckets it rewrites.
+    # -- 4. atomic commit with the lineage manifest.  A commit without a
+    #       rewrite set is add-only and conflict-free; otherwise its
+    #       removes are validated against the pinned snapshot for every
+    #       bucket of the set.
     lineage: dict[str, Any] = {
         "batch_id": batch_id,
         "rows_in": rows_in,
@@ -345,7 +381,7 @@ def _merge_once(
             "write": round(t_write - t_plan, 3),
         },
         "op_counts": op_counts,
-        "affected_buckets": sorted(affected) if cow else sorted({a["bucket"] for a in new_adds}),
+        "affected_buckets": sorted(rewrite | {a["bucket"] for a in new_adds}),
         "files_removed": len(old_adds),
         "files_added": len(new_adds),
     }
@@ -362,8 +398,8 @@ def _merge_once(
         [a["path"] for a in old_adds],
         evolved,
         lineage,
-        base_version=snap.version if cow else None,
-        affected_buckets=affected if cow else None,
+        base_version=snap.version if rewrite else None,
+        affected_buckets=rewrite,
     )
     lineage["version"] = version
     lineage["skipped"] = False

@@ -1,10 +1,16 @@
 """Table maintenance: compaction, tombstone purge, vacuum.
 
-These are the operations that keep a continuously-MERGEd table healthy
-at 10^10-event scale: every micro-batch rewrites its affected buckets,
-so file counts grow linearly with batches until compaction folds them,
-deleted keys linger as tombstones until the feed's LSN low-water mark
-passes them, and superseded files hold disk until vacuumed.
+These keep a continuously-MERGEd table healthy at 10^10-event scale:
+merge-on-read deltas pile up per bucket until folded, deleted keys
+linger as tombstones until the feed's LSN low-water mark passes them,
+and superseded files hold disk until vacuumed.
+
+Compaction and tombstone purge are merges of no batch: each picks a
+bucket set from one pinned snapshot and rewrites it with the merge's own
+body (``cdc.merge.fold_buckets``: one bucket-clustered LWW exchange, one
+base file per bucket).  Their commits check only that the files they
+replace are still live: a delta another writer adds to such a bucket
+meanwhile stays live and resolves against the new base file.
 """
 
 from __future__ import annotations
@@ -12,53 +18,17 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from tickers_daily_intraday_etl_spark.lake.log import Snapshot, VersionNotRetained
+from tickers_daily_intraday_etl_spark.cdc.merge import fold_buckets
+from tickers_daily_intraday_etl_spark.lake.log import VersionNotRetained
 from tickers_daily_intraday_etl_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
     LSN_COL,
     LakeTable,
+    buckets_over,
 )
-
-
-def buckets_over(
-    snap: Snapshot,
-    max_files_per_bucket: int | None = None,
-    max_delta_files_per_bucket: int | None = None,
-) -> dict[int, list[dict[str, Any]]]:
-    """Buckets of ``snap`` whose live files exceed a threshold (pass None
-    to disable one), mapped to their add-records.  Commit-log metadata
-    only: no Spark job, no filesystem probe."""
-    by_bucket: dict[int, list[dict[str, Any]]] = {}
-    for a in snap.live_files.values():
-        by_bucket.setdefault(a["bucket"], []).append(a)
-
-    def over(adds: list[dict[str, Any]]) -> bool:
-        n_delta = sum(a.get("kind") == "delta" for a in adds)
-        return (max_files_per_bucket is not None and len(adds) > max_files_per_bucket) or (
-            max_delta_files_per_bucket is not None and n_delta > max_delta_files_per_bucket
-        )
-
-    return {b: adds for b, adds in by_bucket.items() if over(adds)}
-
-
-def _rewrite_buckets(
-    table: LakeTable, snap: Snapshot, buckets: list[int], manifest: dict[str, Any], keep: Column | None = None
-) -> dict[str, Any]:
-    """Rewrite ``buckets`` from their resolved rows at ``snap`` (filtered
-    by the ``keep`` predicate, if any) into one base file per bucket,
-    replacing exactly the files that were read, under ``snap``'s schema."""
-    df = table._resolved(snap, buckets)
-    if keep is not None:
-        df = df.where(keep)
-    new_adds = table._write_data(df.withColumn(BUCKET_COL, table.bucket_expr()), len(buckets))
-    want = set(buckets)
-    removes = [p for p, a in snap.live_files.items() if a["bucket"] in want]
-    version = table._commit(new_adds, removes, table._schema(snap), manifest)
-    return {"files_removed": len(removes), "files_added": len(new_adds), "version": version}
 
 
 def compact(
@@ -66,11 +36,10 @@ def compact(
     max_files_per_bucket: int | None = 1,
     max_delta_files_per_bucket: int | None = None,
 ) -> dict[str, Any]:
-    """Rewrite buckets that exceed a threshold into one file each.
-    Metadata-only for untouched buckets.  Merge-on-read delta files are
-    FOLDED here (the rewrite applies the LWW total order), so the
-    rewritten buckets come out as plain base files with one row per key
-    again.
+    """Rewrite buckets that exceed a threshold into one base file each.
+    Metadata-only for untouched buckets.  The rewrite always applies the
+    LWW total order, so merge-on-read deltas are folded and keys an
+    ``append`` stored twice collapse to one row per key.
 
     Thresholds (``buckets_over``; a bucket qualifying under either is
     rewritten, pass None to disable one):
@@ -80,12 +49,17 @@ def compact(
       count-of-batches cadence would either over-compact the cold buckets
       or let the hot one accumulate unbounded deltas (every read of it
       LWW-resolves the whole pile).  The size-based trigger folds exactly
-      the hot buckets."""
+      the hot buckets.  A stream gets the same fold inside its merges
+      (``merge_into(max_delta_files_per_bucket=...)``)."""
     snap = table.log.snapshot()
-    buckets = sorted(buckets_over(snap, max_files_per_bucket, max_delta_files_per_bucket))
+    buckets = buckets_over(snap, max_files_per_bucket, max_delta_files_per_bucket)
     if not buckets:
         return {"compacted_buckets": 0, "files_removed": 0, "files_added": 0}
-    return {"compacted_buckets": len(buckets), **_rewrite_buckets(table, snap, buckets, {"op": "compact"})}
+    schema = table._schema(snap)
+    new_adds, old_adds, _ = fold_buckets(table, snap, buckets, schema)
+    version = table._commit(new_adds, [a["path"] for a in old_adds], schema, {"op": "compact"})
+    return {"compacted_buckets": len(buckets), "files_removed": len(old_adds),
+            "files_added": len(new_adds), "version": version}
 
 
 def purge_tombstones(table: LakeTable, lsn_low_water_mark: int) -> dict[str, Any]:
@@ -96,16 +70,17 @@ def purge_tombstones(table: LakeTable, lsn_low_water_mark: int) -> dict[str, Any
     # resolved rows, NOT the raw scan: on a merge-on-read table a raw scan
     # still holds superseded row versions — purging a winning tombstone
     # while a stale non-deleted version of the same key survives would
-    # resurrect it.  Resolution keeps only winners, so dropping a
-    # below-LWM tombstone is safe (nothing older can ever arrive).
+    # resurrect it.  The rewrite likewise filters only AFTER its LWW.
     purgeable = F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col(LSN_COL) < lsn_low_water_mark)
     tombstoned = table._resolved(snap).where(purgeable).select(table.bucket_expr().alias(BUCKET_COL))
-    buckets = sorted(r[BUCKET_COL] for r in tombstoned.distinct().collect())
+    buckets = {r[BUCKET_COL] for r in tombstoned.distinct().collect()}
     if not buckets:
         return {"purged_buckets": 0, "version": snap.version}
+    schema = table._schema(snap)
+    new_adds, old_adds, _ = fold_buckets(table, snap, buckets, schema, keep=~purgeable)
     manifest = {"op": "purge_tombstones", "lwm": lsn_low_water_mark}
-    out = _rewrite_buckets(table, snap, buckets, manifest, keep=~purgeable)
-    return {"purged_buckets": len(buckets), "version": out["version"]}
+    version = table._commit(new_adds, [a["path"] for a in old_adds], schema, manifest)
+    return {"purged_buckets": len(buckets), "version": version}
 
 
 def vacuum(

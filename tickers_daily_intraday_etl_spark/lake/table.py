@@ -41,6 +41,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections import Counter
+from collections.abc import Collection
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,6 +185,25 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def buckets_over(
+    snap: Snapshot,
+    max_files_per_bucket: int | None = None,
+    max_delta_files_per_bucket: int | None = None,
+) -> set[int]:
+    """Buckets of ``snap`` whose live files, or live merge-on-read delta
+    files, exceed a threshold (None disables one); with
+    ``max_delta_files_per_bucket=0`` the buckets holding any delta.
+    Commit-log metadata only: no Spark job, no filesystem probe."""
+    live = snap.live_files.values()
+    files = Counter(a["bucket"] for a in live)
+    deltas = Counter(a["bucket"] for a in live if a.get("kind") == "delta")
+    return {
+        b for b in files
+        if (max_files_per_bucket is not None and files[b] > max_files_per_bucket)
+        or (max_delta_files_per_bucket is not None and deltas[b] > max_delta_files_per_bucket)
+    }
+
+
 class ConcurrentModificationError(Exception):
     """A concurrent commit rewrote files this commit was based on."""
 
@@ -309,16 +330,11 @@ class LakeTable:
             out = out.unionByName(p)
         return out
 
-    @staticmethod
-    def _delta_buckets(snap: Snapshot) -> set[int]:
-        """Buckets holding a live merge-on-read delta file."""
-        return {a["bucket"] for a in snap.live_files.values() if a.get("kind") == "delta"}
-
     def _resolved(self, snap: Snapshot, buckets: list[int] | None = None) -> DataFrame:
         """``_scan`` with merge-on-read resolution when ``snap`` has live
         deltas (no extra shuffle otherwise)."""
         raw = self._scan(snap, buckets)
-        if not self._delta_buckets(snap):
+        if not buckets_over(snap, max_delta_files_per_bucket=0):
             return raw
         from tickers_daily_intraday_etl_spark.cdc.dedup import lww_winner
 
@@ -350,7 +366,7 @@ class LakeTable:
     def has_deltas(self, version: int | None = None) -> bool:
         """True if any live file is a merge-on-read delta (holds candidate
         row versions that must be LWW-resolved at read time)."""
-        return bool(self._delta_buckets(self.log.snapshot(version)))
+        return bool(buckets_over(self.log.snapshot(version), max_delta_files_per_bucket=0))
 
     def read_resolved(self, version: int | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Stored rows with merge-on-read resolution applied: when delta
@@ -403,7 +419,7 @@ class LakeTable:
             return v
 
         bounds = {col: (_b(lo), _b(hi))}
-        delta_buckets = self._delta_buckets(snap)
+        delta_buckets = buckets_over(snap, max_delta_files_per_bucket=0)
         if delta_buckets:
             clean_buckets = sorted({a["bucket"] for a in snap.live_files.values()} - delta_buckets)
             raw = self._resolved(snap, sorted(delta_buckets))
@@ -463,38 +479,24 @@ class LakeTable:
         return set(snap.committed_batch_ids) if snap else set()
 
     # ------------------------------------------------------------ write side
-    def _write_data(
-        self, df: DataFrame, n_buckets_touched: int, kind: str = "base",
-        pre_partitioned: bool = False,
-    ) -> list[dict[str, Any]]:
-        """Write df (must carry BUCKET_COL) into a fresh commit dir,
-        hive-partitioned by bucket; return add-records.  ``kind='delta'``
-        marks merge-on-read files whose rows are candidate versions to be
-        LWW-resolved at read time (folded away by compaction).
-
-        ``pre_partitioned``: the caller guarantees df is already
-        hash-partitioned by BUCKET_COL (the bucket-clustered LWW plan) —
-        the write-side repartition is skipped, saving a full-payload
-        shuffle per merge.  ``partitionBy`` still routes rows to
-        per-bucket files, and because each bucket lives wholly inside
-        one task, the file count stays one per (bucket, schema version)
-        exactly as in the repartitioned path."""
+    def _write_data(self, df: DataFrame, base_buckets: Collection[int]) -> list[dict[str, Any]]:
+        """Write df (carrying BUCKET_COL, hash-partitioned by it so each
+        bucket lives in one task) into a fresh commit dir, one file per
+        (bucket, schema version); return their add-records.  A file of a
+        bucket in ``base_buckets`` is a base file; any other is a
+        merge-on-read delta, LWW-resolved at read time until a rewrite of
+        its bucket folds it."""
         commit_dir = f"data/c-{uuid.uuid4().hex}"
-        out_path = os.path.join(self.path, commit_dir)
-        if pre_partitioned:
-            out = df
-        else:
-            shuffle_n = max(1, min(n_buckets_touched, int(self.spark.conf.get("spark.sql.shuffle.partitions"))))
-            out = df.repartition(shuffle_n, BUCKET_COL)
         (
-            out.sortWithinPartitions(BUCKET_COL, self.key_col)
+            df.sortWithinPartitions(BUCKET_COL, self.key_col)
             .write.partitionBy(BUCKET_COL)
-            .parquet(out_path)
+            .parquet(os.path.join(self.path, commit_dir))
         )
-        return self._scan_commit_dir(commit_dir, kind=kind)
+        return self._scan_commit_dir(commit_dir, base_buckets)
 
-    def _scan_commit_dir(self, commit_dir: str, kind: str = "base") -> list[dict[str, Any]]:
-        """Build add-records for the files a write produced.  The footer
+    def _scan_commit_dir(self, commit_dir: str, base_buckets: Collection[int]) -> list[dict[str, Any]]:
+        """Build add-records for the files a write produced (``kind`` is
+        ``base`` iff the file's bucket is in ``base_buckets``).  The footer
         reads are driver-side and there is one per bucket file (up to
         num_buckets per commit) — done on a thread pool because a serial
         Python loop here is a fixed per-commit cost that eats into
@@ -559,7 +561,7 @@ class LakeTable:
                 "path": rel,
                 "bucket": bucket,
                 "rows": md.num_rows,
-                "kind": kind,
+                "kind": "base" if bucket in base_buckets else "delta",
             }
             if stats:
                 rec["stats"] = stats
@@ -655,6 +657,7 @@ class LakeTable:
     def append(self, df: DataFrame, manifest: dict[str, Any] | None = None) -> int:
         """Plain append (no key semantics) — schema-merged on write."""
         evolved = merge_schemas(self._schema(self.log.snapshot()), df.schema)
+        n = max(1, min(self.num_buckets, int(self.spark.conf.get("spark.sql.shuffle.partitions"))))
         aligned = align_to_schema(df, evolved).withColumn(BUCKET_COL, self.bucket_expr())
-        adds = self._write_data(aligned, self.num_buckets)
+        adds = self._write_data(aligned.repartition(n, BUCKET_COL), range(self.num_buckets))
         return self._commit(adds, [], evolved, manifest)

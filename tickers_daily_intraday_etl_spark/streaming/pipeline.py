@@ -31,7 +31,6 @@ from pyspark.sql import types as T
 
 from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
 from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA
-from tickers_daily_intraday_etl_spark.lake.maintenance import buckets_over
 from tickers_daily_intraday_etl_spark.lake.table import LakeTable
 
 
@@ -49,7 +48,6 @@ class CdcPipeline:
         salt_partitions: int = 0,
         max_files_per_trigger: int | None = None,
         feed_format: str = "parquet",
-        compact_every: int | None = None,
         compact_delta_files_threshold: int | None = None,
         merge_mode: str = "cow",
         maintain_every: int | None = None,
@@ -63,14 +61,9 @@ class CdcPipeline:
         self.salt_partitions = salt_partitions
         self.max_files_per_trigger = max_files_per_trigger
         self.feed_format = feed_format
-        self.compact_every = compact_every
-        # 'mor' pairs naturally with compaction: deltas accrue per
-        # micro-batch and compaction folds them.  compact_every is a
-        # batch-count cadence (whole-table health); the delta-files
-        # threshold is SIZE-based and per-bucket — a skewed feed piles
-        # deltas into its hot buckets, and this folds exactly those while
-        # cold buckets stay untouched (checked against the commit log
-        # after every batch; the check is metadata-only).
+        # merge-on-read delta pressure bound, per bucket: merge_into folds
+        # a bucket holding this many deltas into one base file (hot
+        # buckets only) inside the batch's own merge
         self.compact_delta_files_threshold = compact_delta_files_threshold
         self.merge_mode = merge_mode
         # Self-maintenance cadence (off by default): every N applied
@@ -145,6 +138,7 @@ class CdcPipeline:
             batch_id=batch_id,
             salt_partitions=self.salt_partitions,
             mode=self.merge_mode,
+            max_delta_files_per_bucket=self.compact_delta_files_threshold,
             extra_manifest={
                 "n_input_files": len(in_files),
                 "input_files": [os.path.basename(f) for f in in_files[:64]],
@@ -154,25 +148,11 @@ class CdcPipeline:
         if manifest.get("skipped"):
             return
         self._batches_applied += 1
-        # imported at call time so a wrapper installed on the module
-        # (tracing) sees every maintenance call
-        from tickers_daily_intraday_etl_spark.lake.maintenance import compact, vacuum
-
-        if self.compact_every and self._batches_applied % self.compact_every == 0:
-            self.lineage.append({"maintenance": compact(self.table)})
-        elif self.compact_delta_files_threshold is not None and buckets_over(
-            self.table.log.snapshot(), max_delta_files_per_bucket=self.compact_delta_files_threshold
-        ):
-            self.lineage.append(
-                {
-                    "maintenance": compact(
-                        self.table,
-                        max_files_per_bucket=None,
-                        max_delta_files_per_bucket=self.compact_delta_files_threshold,
-                    )
-                }
-            )
         if self.maintain_every and self._batches_applied % self.maintain_every == 0:
+            # imported at call time so a wrapper installed on the module
+            # (tracing) sees every maintenance call
+            from tickers_daily_intraday_etl_spark.lake.maintenance import vacuum
+
             self.lineage.append(
                 {
                     "maintenance": vacuum(
