@@ -37,7 +37,7 @@ def main() -> None:
                          "feeds (see cdc/dedup.py lww_winner)")
     ap.add_argument("--feed-format", default="parquet")
     ap.add_argument("--compact-delta-threshold", type=int, default=None,
-                    help="size-based trigger: a bucket already holding K "
+                    help="size-based trigger (K >= 1): a bucket already holding K "
                          "merge-on-read delta files is folded into one base "
                          "file by the next merge (hot buckets only; cold "
                          "buckets keep their deltas)")

@@ -1,4 +1,4 @@
-"""Compaction, tombstone purge, vacuum — state must be invariant."""
+"""Compaction, tombstone purge, vacuum — the LWW-resolved state must be invariant."""
 
 import datetime as dt
 import os
@@ -45,6 +45,19 @@ def test_compact_preserves_state_and_reduces_files(spark, tmpdir_path):
     assert _state(t) == before
     # idempotent: second compact is a no-op
     assert compact(t, max_files_per_bucket=1)["compacted_buckets"] == 0
+
+
+def test_compact_collapses_keys_an_append_stored_twice(spark, tmpdir_path):
+    """Compaction always applies the LWW: a key two plain appends stored
+    (read() shows both, no delta is live) leaves it as one row."""
+    t = LakeTable.create_if_not_exists(
+        spark, os.path.join(tmpdir_path, "t"), TARGET_SCHEMA, num_buckets=2
+    )
+    for tok in (1, 2):
+        t.append(spark.createDataFrame([Row(doc_id="a", tokens=[tok], n_tok=1, source="s")], TARGET_SCHEMA))
+    assert t.read().count() == 2
+    assert compact(t, max_files_per_bucket=1)["files_removed"] == 2
+    assert [r.doc_id for r in t.read().collect()] == ["a"]
 
 
 def test_purge_tombstones_respects_low_water_mark(spark, tmpdir_path):

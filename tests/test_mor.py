@@ -13,6 +13,7 @@ Invariants:
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tickers_daily_intraday_etl_spark.cdc.feedgen import generate_feed
@@ -206,7 +207,7 @@ def test_size_based_compaction_folds_hot_bucket_only(spark, tmpdir_path):
 
     before = delta_counts()
     assert before[hot_b] == 5 and before[cold_b] == 1
-    res = compact(table, max_files_per_bucket=None, max_delta_files_per_bucket=2)
+    res = compact(table, max_files_per_bucket=1)  # 5 files in the hot bucket, 1 in the cold
     assert res["compacted_buckets"] == 1
     after = delta_counts()
     assert hot_b not in after          # hot bucket folded to base
@@ -226,6 +227,13 @@ def test_size_based_compaction_folds_hot_bucket_only(spark, tmpdir_path):
     assert hot_b not in after and after[cold_b] == 2
     assert _tokens_map(table.read()) == {hot_key: [7], cold_key: [2]}
 
+    # an empty batch still commits the fold of a bucket at the threshold
+    m = merge_into(table, spark.createDataFrame([], CDC_SCHEMA),
+                   batch_id="empty", mode="mor", max_delta_files_per_bucket=2)
+    assert m["rows_in"] == 0 and m["files_removed"] == 2
+    assert delta_counts() == {}
+    assert _tokens_map(table.read()) == {hot_key: [7], cold_key: [2]}
+
 
 def test_pipeline_delta_threshold_triggers_compaction(spark, tmpdir_path, monkeypatch):
     """End-to-end: a MoR pipeline with compact_delta_files_threshold folds
@@ -242,6 +250,9 @@ def test_pipeline_delta_threshold_triggers_compaction(spark, tmpdir_path, monkey
     events = generate_feed(n_events=600, n_docs=10, seed=3, p_delete=0.0)  # hot keys
     feed_dir = os.path.join(tmpdir_path, "feed")
     write_feed_segments(events, feed_dir, n_segments=8)
+    with pytest.raises(ValueError):  # rejected at construction, not in the first batch
+        CdcPipeline(spark, feed_dir, os.path.join(tmpdir_path, "t"), os.path.join(tmpdir_path, "ck"),
+                    compact_delta_files_threshold=0)
     pipe = CdcPipeline(
         spark, feed_dir, os.path.join(tmpdir_path, "t"), os.path.join(tmpdir_path, "ck"),
         feed_schema=CDC_SCHEMA, num_buckets=8, max_files_per_trigger=1,

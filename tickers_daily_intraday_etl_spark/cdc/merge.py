@@ -21,7 +21,7 @@ buckets' live rows (base and deltas) join the batch in the LWW and
 commit as base files replacing exactly the files read; any other bucket
 the batch touches gets a delta file.  CoW = the touched buckets; MoR =
 none, plus any bucket at the delta threshold; ``compact`` = the buckets
-over its thresholds, no batch; ``purge_tombstones`` = that plus a filter.
+over its file threshold, no batch; ``purge_tombstones`` = that plus a filter.
 1. op counts — a SPARSE copy-on-write batch runs one small stats
    aggregation ((op x bucket) counts: rows_in, per-op counts and the
    touched-bucket list in one pass); a merge-on-read or DENSE batch
@@ -361,10 +361,12 @@ def _merge_once(
             rows_in = int(metrics.get("rows_in", 0))
             op_counts = {o: int(metrics[f"n_{o}"]) for o in ("I", "U", "D") if metrics.get(f"n_{o}")}
 
-    if rows_in == 0:
+    if rows_in == 0 and not old_adds:
         # Conditional-skip sink (reference: staging/load_staging_data.py:38-48)
         # — still record the epoch so the fence holds.  Files an observed
         # write produced stay uncommitted orphans for vacuum's min-age sweep.
+        # An empty batch that already folded its rewrite set commits the
+        # fold below: it is valid on its own and would otherwise be redone.
         version = table._commit([], [], evolved, {"batch_id": batch_id, "rows_in": 0})
         return {"batch_id": batch_id, "rows_in": 0, "version": version, "skipped": False}
 

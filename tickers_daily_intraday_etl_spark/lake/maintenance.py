@@ -31,28 +31,16 @@ from tickers_daily_intraday_etl_spark.lake.table import (
 )
 
 
-def compact(
-    table: LakeTable,
-    max_files_per_bucket: int | None = 1,
-    max_delta_files_per_bucket: int | None = None,
-) -> dict[str, Any]:
-    """Rewrite buckets that exceed a threshold into one base file each.
-    Metadata-only for untouched buckets.  The rewrite always applies the
-    LWW total order, so merge-on-read deltas are folded and keys an
-    ``append`` stored twice collapse to one row per key.
-
-    Thresholds (``buckets_over``; a bucket qualifying under either is
-    rewritten, pass None to disable one):
-    * ``max_files_per_bucket`` — total live files (base + delta);
-    * ``max_delta_files_per_bucket`` — merge-on-read delta pressure only.
-      A skewed feed concentrates deltas in its hot buckets; a
-      count-of-batches cadence would either over-compact the cold buckets
-      or let the hot one accumulate unbounded deltas (every read of it
-      LWW-resolves the whole pile).  The size-based trigger folds exactly
-      the hot buckets.  A stream gets the same fold inside its merges
-      (``merge_into(max_delta_files_per_bucket=...)``)."""
+def compact(table: LakeTable, max_files_per_bucket: int = 1) -> dict[str, Any]:
+    """Rewrite every bucket holding more than ``max_files_per_bucket``
+    live files (base + delta) into one base file.  Metadata-only for
+    untouched buckets.  The rewrite always applies the LWW total order,
+    so merge-on-read deltas are folded and keys an ``append`` stored
+    twice collapse to one row per key.  A stream bounds its per-bucket
+    delta pressure inside its own merges instead
+    (``merge_into(max_delta_files_per_bucket=...)``)."""
     snap = table.log.snapshot()
-    buckets = buckets_over(snap, max_files_per_bucket, max_delta_files_per_bucket)
+    buckets = buckets_over(snap, max_files_per_bucket)
     if not buckets:
         return {"compacted_buckets": 0, "files_removed": 0, "files_added": 0}
     schema = table._schema(snap)

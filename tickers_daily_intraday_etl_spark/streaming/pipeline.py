@@ -54,6 +54,9 @@ class CdcPipeline:
         vacuum_retain_versions: int = 8,
         expire_log_checkpoints: int = 2,
     ):
+        if compact_delta_files_threshold is not None and compact_delta_files_threshold < 1:
+            # rejected here, not inside the first foreachBatch's merge
+            raise ValueError(f"compact_delta_files_threshold must be >= 1, got {compact_delta_files_threshold}")
         self.spark = spark
         self.feed_dir = feed_dir
         self.checkpoint_dir = checkpoint_dir
